@@ -6,23 +6,23 @@ each feature URL and stores one JSON-LD doc keyed by content hash
 Here the "harvest" is mention detection over the `content` column:
 imports, defined identifiers, and URIs, per language.
 
-Execution model (input_hint: vectorized pandas/Arrow UDFs, no per-row
-Python):
+Execution model:
 
 - ``content_sha`` is computed JVM-side with ``F.sha2`` *before* the UDF
   and carried through unchanged — the per-row invariant.
-- ``extract_mentions`` runs ``mapInPandas``; inside each Arrow batch all
-  regex work is vectorized pandas ``.str`` ops:
-    * values come from ``Series.str.extractall`` (C regex engine),
-    * exact char spans come from a split trick — ``str.split`` with a
-      capturing group keeps the matched text in the pieces, so
-      ``explode`` + groupby-cumsum of piece lengths yields each match's
-      start offset with zero Python-level row loops.
-  The span covers the full matched statement (e.g. ``import foo.bar``);
-  ``value`` is the normalized captured token.
-- ``extract_mentions_relational`` is the pure-JVM fallback (``F.regexp_
-  extract_all``): same values, no spans; it exists so the DuckDB oracle
-  can verify extraction end-to-end in SQL.
+- ``PATTERNS`` is the one pattern table, ``kind → lang → regex``.  Group 1
+  of each regex is the normalized mention value; the whole match is its
+  span (e.g. ``import foo.bar`` for value ``foo.bar``).
+- ``extract_mentions`` runs ``mapInPandas``; each Arrow batch is one
+  Python loop over rows and kinds that runs the compiled pattern's
+  ``finditer`` once, taking the value from ``group(1)`` and the span from
+  ``start()``/``end()``.  pandas offers no faster route: its
+  ``Series.str.extractall`` is itself a per-row Python loop and yields no
+  spans, so it would cost a second pass per pattern.
+- ``extract_mentions_relational`` is the pure-JVM twin
+  (``F.regexp_extract_all``) built from the same table: same values, no
+  spans; it exists so the DuckDB oracle can verify extraction end-to-end
+  in SQL.
 
 Scale notes: extraction is embarrassingly parallel (narrow map), so the
 only scale risks are (a) Python worker batch sizing — governed by
@@ -32,6 +32,7 @@ partitions downstream — handled by salting in pipeline.py, not here.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
@@ -40,148 +41,56 @@ from pyspark.sql import functions as F
 
 from ..schema import MENTIONS, enforce
 
-# Per-lang patterns.  Each entry: (value_rx, span_rx)
-#   value_rx — ONE capturing group = the normalized mention value
-#   span_rx  — same matches, ONE outer capturing group = full match text
-#              (inner groups non-capturing) for the split/offset pass.
-IMPORT_PATTERNS: dict[str, tuple[str, str]] = {
-    "python": (
-        r"(?m)^[ \t]*(?:import|from)[ \t]+([\w\.]+)",
-        r"(?m)((?:^|(?<=\n))[ \t]*(?:import|from)[ \t]+[\w\.]+)",
-    ),
-    "go": (
-        r"(?m)^[ \t]*import[ \t]+\"([^\"]+)\"",
-        r"(?m)((?:^|(?<=\n))[ \t]*import[ \t]+\"[^\"]+\")",
-    ),
-    "java": (
-        r"(?m)^[ \t]*import[ \t]+([\w\.]+)[ \t]*;",
-        r"(?m)((?:^|(?<=\n))[ \t]*import[ \t]+[\w\.]+[ \t]*;)",
-    ),
+# Languages missing from a kind's row (unknown langs, and every lang for
+# "uri") use this entry.
+FALLBACK_LANG = "python"
+
+PATTERNS: dict[str, dict[str, str]] = {
+    "import": {
+        "python": r"(?m)^[ \t]*(?:import|from)[ \t]+([\w\.]+)",
+        "go": r"(?m)^[ \t]*import[ \t]+\"([^\"]+)\"",
+        "java": r"(?m)^[ \t]*import[ \t]+([\w\.]+)[ \t]*;",
+    },
+    "identifier": {
+        "python": r"(?m)^[ \t]*def[ \t]+(\w+)",
+        "go": r"(?m)^func[ \t]+(\w+)",
+        "java": r"(?m)\b(?:int|void|long|double|String)[ \t]+(\w+)[ \t]*\(",
+    },
+    "uri": {
+        FALLBACK_LANG: r"(https?://[^\s\"'<>\)\];]+)",
+    },
 }
 
-IDENT_PATTERNS: dict[str, tuple[str, str]] = {
-    "python": (r"(?m)^[ \t]*def[ \t]+(\w+)", r"(?m)((?:^|(?<=\n))[ \t]*def[ \t]+\w+)"),
-    "go": (r"(?m)^func[ \t]+(\w+)", r"(?m)((?:^|(?<=\n))func[ \t]+\w+)"),
-    "java": (
-        r"(?m)\b(?:int|void|long|double|String)[ \t]+(\w+)[ \t]*\(",
-        r"(?m)(\b(?:int|void|long|double|String)[ \t]+\w+[ \t]*\()",
-    ),
+_COMPILED = {
+    kind: {lang: re.compile(rx) for lang, rx in by_lang.items()}
+    for kind, by_lang in PATTERNS.items()
 }
 
-URI_PATTERN: tuple[str, str] = (
-    r"(https?://[^\s\"'<>\)\];]+)",
-    r"(https?://[^\s\"'<>\)\];]+)",
-)
-
-
-def _match_spans(content: pd.Series, span_rx: str) -> pd.DataFrame:
-    """Vectorized (row, match_no) -> (start, end) via the split trick.
-
-    ``str.split`` with a capturing group interleaves non-match and match
-    pieces: [pre, m0, mid, m1, ..., post].  Cumulative piece lengths give
-    exact char offsets; odd positions are matches.
-    """
-    pieces = content.str.split(span_rx, regex=True)
-    ex = pieces.explode()
-    lens = ex.str.len().fillna(0).astype("int64")
-    grp = ex.groupby(level=0)
-    pos_in_row = grp.cumcount()
-    starts = lens.groupby(level=0).cumsum() - lens
-    is_match = (pos_in_row % 2) == 1
-    out = pd.DataFrame(
-        {
-            "start": starts[is_match].astype("int32"),
-            "end": (starts[is_match] + lens[is_match]).astype("int32"),
-        }
-    )
-    out["match"] = out.groupby(level=0).cumcount()
-    out.index.name = "row"
-    return out.reset_index()
-
-
-def _extract_kind(
-    pdf: pd.DataFrame, kind: str, value_rx: str, span_rx: str
-) -> pd.DataFrame:
-    """All mentions of one kind in one language-homogeneous batch."""
-    content = pdf["content"]
-    vals = content.str.extractall(value_rx)  # MultiIndex (row, match), col 0
-    if vals.empty:
-        return pd.DataFrame(
-            columns=["row", "match", "value", "start", "end"]
-        )
-    vals = vals.rename(columns={0: "value"}).reset_index()
-    vals = vals.rename(columns={"level_0": "row"})
-    spans = _match_spans(content, span_rx)
-    merged = vals.merge(spans, on=["row", "match"], how="left")
-    merged["start"] = merged["start"].fillna(-1).astype("int32")
-    merged["end"] = merged["end"].fillna(-1).astype("int32")
-    merged["kind"] = kind
-    return merged[["row", "match", "value", "start", "end", "kind"]]
-
-
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    frames = []
-    for lang, sub in pdf.groupby("lang", sort=False):
-        kinds = [
-            ("import", *IMPORT_PATTERNS.get(lang, IMPORT_PATTERNS["python"])),
-            ("identifier", *IDENT_PATTERNS.get(lang, IDENT_PATTERNS["python"])),
-            ("uri", *URI_PATTERN),
-        ]
-        for kind, value_rx, span_rx in kinds:
-            m = _extract_kind(sub.reset_index(drop=True), kind, value_rx, span_rx)
-            if m.empty:
-                continue
-            keys = sub.reset_index(drop=True)[
-                ["content_sha", "repo", "path", "commit"]
-            ]
-            joined = m.merge(
-                keys, left_on="row", right_index=True, how="left"
-            )
-            frames.append(joined)
-    if not frames:
-        return pd.DataFrame(
-            columns=["content_sha", "repo", "path", "commit", "kind", "value", "start", "end"]
-        )
-    out = pd.concat(frames, ignore_index=True)
-    return out[["content_sha", "repo", "path", "commit", "kind", "value", "start", "end"]]
-
-
+_FLAT_COLUMNS = ["content_sha", "repo", "path", "commit", "kind", "value", "start", "end"]
 _FLAT_SCHEMA = (
     "content_sha string, repo string, path string, commit string, "
     "kind string, value string, start int, end int"
 )
 
 
+def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    out = []
+    for sha, repo, path, commit, lang, content in zip(
+        pdf["content_sha"], pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"], pdf["content"]
+    ):
+        if content is None:
+            continue
+        for kind, by_lang in _COMPILED.items():
+            rx = by_lang.get(lang) or by_lang[FALLBACK_LANG]
+            for m in rx.finditer(content):
+                out.append((sha, repo, path, commit, kind, m.group(1), m.start(), m.end()))
+    return pd.DataFrame(out, columns=_FLAT_COLUMNS)
+
+
 def with_content_sha(files: DataFrame) -> DataFrame:
     """JVM-side sha256 of content — the end-to-end per-row invariant
     (≈ hash-keyed summoned docs, /root/reference/docs/hdt.md:14)."""
     return files.withColumn("content_sha", F.sha2(F.col("content"), 256))
-
-
-def extract_mentions_grouped(files: DataFrame, salt: int = 8) -> DataFrame:
-    """Grouped-map variant: applyInPandas over (repo, salt) groups.
-
-    Same extraction as `extract_mentions`, but each invocation sees one
-    salted repo slice — the §2.9 `applyInPandas` surface for per-repo
-    work that needs the whole group in hand (e.g. repo-level stats
-    alongside extraction).  Salting bounds group size so a mega-repo
-    never materializes as one pandas frame (north_rule skew handling).
-    """
-    if "content_sha" not in files.columns:
-        files = with_content_sha(files)
-    src = files.select(
-        "content_sha", "repo", "path", "commit", "lang", "content"
-    ).withColumn("_salt", F.pmod(F.xxhash64("path"), F.lit(salt)))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _extract_batch(pdf.drop(columns=["_salt"]))
-
-    flat = src.groupBy("repo", "_salt").applyInPandas(run, schema=_FLAT_SCHEMA)
-    out = flat.select(
-        "content_sha", "repo", "path", "commit", "kind", "value",
-        F.struct(F.col("start").alias("start"), F.col("end").alias("end")).alias("span"),
-    )
-    return enforce(out, MENTIONS)
 
 
 def extract_mentions(files: DataFrame) -> DataFrame:
@@ -209,31 +118,25 @@ def extract_mentions(files: DataFrame) -> DataFrame:
     return enforce(out, MENTIONS)
 
 
-# Pure-JVM variant: regexp_extract_all per kind, exploded.  No spans
-# (start=end=-1) but byte-identical values — SQL-oracle checkable and
-# whole-stage-codegen friendly for pipelines that don't need offsets.
-_JVM_IMPORT_RX = {
-    "python": r"(?m)^[ \t]*(?:import|from)[ \t]+([\w\.]+)",
-    "go": r"(?m)^[ \t]*import[ \t]+\"([^\"]+)\"",
-    "java": r"(?m)^[ \t]*import[ \t]+([\w\.]+)[ \t]*;",
-}
-_JVM_IDENT_RX = {
-    "python": r"(?m)^[ \t]*def[ \t]+(\w+)",
-    "go": r"(?m)^func[ \t]+(\w+)",
-    "java": r"(?m)(?:int|void|long|double|String)[ \t]+(\w+)[ \t]*\(",
-}
-_JVM_URI_RX = r"(https?://[^\s\"'<>\)\];]+)"
+# Java regex flags that make the PATTERNS entries match as Python ``re``
+# does: (?d) ends lines at \n only (Java's (?m)^ also starts a line after
+# \r, U+0085 and U+2028) and (?U) makes \w, \s and \b Unicode-aware
+# (Java's are ASCII-only).
+_JVM_FLAGS = "(?dU)"
 
 
-def _rx_by_lang(rx_map: dict[str, str]):
-    # unknown langs fall back to the python patterns — the SAME fallback
-    # as the pandas path's IMPORT_PATTERNS.get(lang, ...["python"]), so
-    # the two extraction paths stay byte-identical for any lang.
-    return (
-        F.when(F.col("lang") == "go", F.regexp_extract_all("content", F.lit(rx_map["go"]), 1))
-        .when(F.col("lang") == "java", F.regexp_extract_all("content", F.lit(rx_map["java"]), 1))
-        .otherwise(F.regexp_extract_all("content", F.lit(rx_map["python"]), 1))
-    )
+def _jvm_values(by_lang: dict[str, str]):
+    """regexp_extract_all of each row's lang entry, with the pandas
+    path's fallback for langs the row does not name."""
+
+    def extract_all(rx: str):
+        return F.regexp_extract_all("content", F.lit(_JVM_FLAGS + rx), 1)
+
+    values = extract_all(by_lang[FALLBACK_LANG])
+    for lang, rx in by_lang.items():
+        if lang != FALLBACK_LANG:
+            values = F.when(F.col("lang") == lang, extract_all(rx)).otherwise(values)
+    return values
 
 
 def extract_mentions_relational(files: DataFrame) -> DataFrame:
@@ -244,14 +147,10 @@ def extract_mentions_relational(files: DataFrame) -> DataFrame:
         "content_sha", "repo", "path", "commit", "lang", "content"
     ).withColumn(
         "kinds",
-        F.array(
-            F.struct(F.lit("import").alias("kind"), _rx_by_lang(_JVM_IMPORT_RX).alias("values")),
-            F.struct(F.lit("identifier").alias("kind"), _rx_by_lang(_JVM_IDENT_RX).alias("values")),
-            F.struct(
-                F.lit("uri").alias("kind"),
-                F.regexp_extract_all("content", F.lit(_JVM_URI_RX), 1).alias("values"),
-            ),
-        ),
+        F.array(*[
+            F.struct(F.lit(kind).alias("kind"), _jvm_values(by_lang).alias("values"))
+            for kind, by_lang in PATTERNS.items()
+        ]),
     )
     exploded = (
         base.select(

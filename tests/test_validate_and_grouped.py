@@ -1,15 +1,9 @@
-"""Batch validation (SHACL-sidecar analog) + applyInPandas grouped
-extraction equivalence + IVF ANN."""
+"""Batch validation (SHACL-sidecar analog) + IVF ANN."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from scheduler_spark.operators.extract import (
-    extract_mentions,
-    extract_mentions_grouped,
-    with_content_sha,
-)
 from scheduler_spark.operators.similarity import brute_force_topk, ivf_ann_topk
 from scheduler_spark.operators.validate import validate_files
 from scheduler_spark.synth import synth_files
@@ -41,21 +35,6 @@ def test_synth_corpus_fully_valid(spark):
     files = synth_files(spark, 200)
     v = validate_files(files)
     assert v.filter(~F.col("is_valid")).count() == 0
-
-
-def test_grouped_extraction_equals_map_extraction(spark):
-    files = with_content_sha(synth_files(spark, 300))
-    a = {
-        tuple(r)
-        for r in extract_mentions(files).select("content_sha", "kind", "value").collect()
-    }
-    b = {
-        tuple(r)
-        for r in extract_mentions_grouped(files)
-        .select("content_sha", "kind", "value")
-        .collect()
-    }
-    assert a == b
 
 
 def test_ivf_ann_finds_planted_neighbors(spark):
