@@ -182,10 +182,10 @@ def main() -> None:
         pq_encode_arrow,
         train_pq_model,
     )
-    from scheduler_spark.queries import _spread, _t
+    from scheduler_spark.queries import _spread
 
     t0 = time.perf_counter()
-    _vecs = _spread(spark, _t(spark, sf_dir, "embeddings")).localCheckpoint()
+    _vecs = _spread(spark, sf_dir, "embeddings").localCheckpoint()
     _pq_model = train_pq_model(_vecs, n_lists=8)
     _pq_index = pq_encode_arrow(_vecs, _pq_model).localCheckpoint()
     _pq_index.count()

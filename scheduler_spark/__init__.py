@@ -14,10 +14,9 @@ This package re-expresses those semantics Spark-first:
 - ``sources``     — source catalogs (sitemap-index analog) and table readers
 - ``operators``   — extraction, entity linking, connected components,
                     canonicalization, materialization, dedup, similarity,
-                    text analysis, multimodal plumbing
+                    text analysis, graph analytics
 - ``functions``   — reusable column expressions (hashing, text metrics)
 - ``plans``       — checkpoint/resume, lineage counters
-- ``streaming``   — Structured Streaming ingest (Trigger.AvailableNow)
 - ``catalog``     — partitioned-table storage layer (parquet locally;
                     Iceberg is the drop-in production path)
 """

@@ -131,7 +131,9 @@ def connected_components(
     self-loops is its own singleton component (a self-match asserts the
     entity exists — it must not vanish from canonicalization).  Nodes
     absent from `edges` entirely are the caller's concern (left-join
-    and coalesce to self).
+    and coalesce to self).  Raises RuntimeError if the distributed loop
+    does not converge within `max_iterations` rounds (the closure.py
+    contract: a silently truncated labeling is worse than none).
     """
     def fingerprint(df: DataFrame) -> tuple:
         row = df.agg(
@@ -188,6 +190,14 @@ def connected_components(
         if cur == prev:
             break
         prev = cur
+    else:
+        # an unchanged fingerprint after the final round is convergence
+        # (the break above); anything else means e may not be a star yet
+        raise RuntimeError(
+            f"connected_components did not converge within {max_iterations} "
+            "rounds; raise max_iterations — labels read off a graph that is "
+            "not yet a star are wrong"
+        )
     # after convergence e is a star: (member, root); add the roots.
     labels = e.select(F.col("u").alias("entity_id"), F.col("v").alias("canonical_id"))
     roots = e.select(F.col("v").alias("entity_id")).distinct().withColumn(

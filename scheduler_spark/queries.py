@@ -34,10 +34,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Round-robin rows across the session's cores.  The sf* test
-    tables are single parquet files (one scan split), which would pin
-    expression-heavy stages — the interpreted PQ/IVF encode — to ONE
+def _spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Base table `name`, round-robined across the session's cores.  The
+    sf* test tables are single parquet files (one scan split), which would
+    pin expression-heavy stages — the interpreted PQ/IVF encode — to ONE
     thread; a production corpus has thousands of natural scan splits.
     The shuffle is trivial at test scale (<1 MB) and restores the
     parallelism the plan would have on real inputs.
@@ -47,16 +47,12 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     skipped entirely, so the helper never costs a corpus-sized shuffle
     at production scale (the round rules' "derive from input size, not
     a constant" discipline)."""
+    df = _t(spark, sf_dir, name)
     par = spark.sparkContext.defaultParallelism
     # The split-count probe (df.rdd.getNumPartitions) pays a full
     # physical planning pass (~0.1 s driver time per call, measured);
-    # memoize it per (session, logical plan) — callers pass raw scans,
-    # so the logical-plan string is just the parquet path and the
-    # repeat cost drops to one py4j toString.
-    key = (
-        spark.sparkContext.applicationId,
-        df._jdf.queryExecution().logical().toString(),
-    )
+    # memoize it per (session, path), as _n_rows does.
+    key = (spark.sparkContext.applicationId, sf_dir, name)
     n = _SPREAD_PARTS.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()
@@ -1614,7 +1610,7 @@ def quarantine_invalid_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def harvest_word_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r06: spread — pure map over a single-file table ran on ONE core
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.sha2("text", 256).alias("content_sha"),
@@ -1802,8 +1798,8 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window counts — the batch twin of the streaming
-    windowed aggregation (streaming/ingest.windowed_source_counts)."""
+    """Tumbling-window counts over event time — the batch form of a
+    watermarked streaming window aggregation."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -2725,11 +2721,9 @@ def group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def video_frame_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked twin of the multimodal frame sampler
-    (operators/multimodal.sample_frames): payload sliced at fixed
-    strides, one row + sha per frame — here over the text column so
-    DuckDB can verify (it cannot slice BLOBs); the binary-payload
-    variant with the same explosion contract is pytest-verified.
+    """Fixed-stride frame sampling: payload sliced at fixed strides,
+    one row + sha per frame — over the text column so DuckDB can verify
+    (it cannot slice BLOBs).
     Pure sequence+explode+substr+sha2: codegen, shuffle-free."""
     d = _t(spark, sf_dir, "documents")
     # greatest(…, 1): an empty doc still emits one (empty) frame row —
@@ -2815,7 +2809,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersect 64-bit shingle hashes, not 3-char strings: integer
     # equality beats string hashing per probe, and |set| is preserved
     # (in-doc hash collision odds ~1e-15)
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
+    d = _spread(spark, sf_dir, "documents").select(
         "doc_id", "source",
         F.array_distinct(
             F.transform(_doc_shingles_spark(F.col("text")), lambda s: F.xxhash64(s))
@@ -2945,7 +2939,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import prefix_jaccard_pairs
 
     return prefix_jaccard_pairs(
-        _spread(spark, _t(spark, sf_dir, "documents")),
+        _spread(spark, sf_dir, "documents"),
         id_col="doc_id", text_col="text", block_col="source", threshold=0.7,
     )
 
@@ -2980,7 +2974,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import prefix_containment_pairs
 
     return prefix_containment_pairs(
-        _spread(spark, _t(spark, sf_dir, "documents")),
+        _spread(spark, sf_dir, "documents"),
         id_col="doc_id", text_col="text", block_col="source",
         threshold_num=9, threshold_den=10,
     )
@@ -3048,7 +3042,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     v = (
-        _spread(spark, _t(spark, sf_dir, "embeddings"))
+        _spread(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
         .withColumn("nrm", norm)
     )
@@ -3151,7 +3145,7 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _spread(spark, _t(spark, sf_dir, "embeddings")).select(
+    v = _spread(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     q = v.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("qid"), F.col("e").alias("eq"))
@@ -3216,7 +3210,7 @@ def embedding_int8_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — no joins, no window, nothing quadratic; at 100 TB the
     scale pass is a constant-size rollup and quantization pipelines
     with the scan."""
-    v = _spread(spark, _t(spark, sf_dir, "embeddings")).select(
+    v = _spread(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     sc_rows = (
@@ -3288,7 +3282,7 @@ def ann_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     `embedding_int8_quant`; the wide scan moves 8-bit-code arrays
     (4× less shuffle payload than float64, SIMD-friendly integer
     dot), and the float rescore touches only 30 rows per probe."""
-    v = _spread(spark, _t(spark, sf_dir, "embeddings")).select(
+    v = _spread(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e0")
     )
     norm = F.sqrt(
@@ -3412,7 +3406,7 @@ def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     join), one corpus scan, per-probe top-k window, and a 10-row-
     per-probe vote rollup — at 100 TB this is the same access path
     as ann_cosine_topk (or its IVF/LSH scale variants drop in)."""
-    v = _spread(spark, _t(spark, sf_dir, "embeddings")).select(
+    v = _spread(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e"), "label"
     )
     q = v.filter(F.col("vec_id") < 50).select(
@@ -3943,7 +3937,7 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivf_ann_topk
 
     truth = ann_cosine_topk(spark, sf_dir).select("qid", "cid")
-    v = _spread(spark, _t(spark, sf_dir, "embeddings"))
+    v = _spread(spark, sf_dir, "embeddings")
     q = v.filter(F.col("vec_id") < 5)
     approx = ivf_ann_topk(q, v, k=10, n_lists=8, n_probes=6).select("qid", "cid")
     hits = truth.join(approx, ["qid", "cid"], "left_semi")
@@ -4033,7 +4027,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivfpq_ann_topk
 
     truth = ann_cosine_topk(spark, sf_dir).select("qid", "cid")
-    v = _spread(spark, _t(spark, sf_dir, "embeddings"))
+    v = _spread(spark, sf_dir, "embeddings")
     q = v.filter(F.col("vec_id") < 5)
     approx = ivfpq_ann_topk(
         q, v, k=10, n_lists=8, n_probes=6, shortlist=150
@@ -4212,7 +4206,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combines."""
     # r06: scan spread to all cores — the single-file documents table
     # otherwise tokenizes in ONE task per consuming branch (guide §6)
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.explode(
@@ -4300,7 +4294,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent."""
     # r06: scan spread + the tf table materialized once — it feeds
     # dfreq, dl, the corpus sumdl scalar AND the scoring join
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.explode(
@@ -4391,7 +4385,7 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans as ONE task) and the bigram rows MATERIALIZED once — bi
     # feeds three aggregation branches plus the scoring join, and each
     # re-derivation repaid the tokenize+explode (guide §1.2, §2.4).
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
         F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0).alias("toks"),
@@ -4520,7 +4514,7 @@ def kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-scale three more times (by gram, w1, then w2);
     # per-occurrence lp values are identical doubles (deterministic
     # function of the gram), so each doc averages the same multiset.
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
         F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0).alias("toks"),
@@ -4662,7 +4656,7 @@ def token_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary is broadcast and the per-doc join fans out at most 50
     rows per document."""
     # r06: scan spread (single-file table = one scan task otherwise)
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.explode(
@@ -4753,7 +4747,7 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r06: _spread restores scan parallelism over the single-file local
     # table (a doc-granular ROUND-ROBIN — never a token-row shuffle,
     # and a no-op at production split counts since _spread is adaptive)
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     t = d.select("doc_id", "source", word_tokens(F.col("text")).alias("toks"))
     # _srt materialized in its own projection (multi-referenced by the
     # run-length top_c fold)
@@ -5716,7 +5710,7 @@ def ccnet_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r06: scan spread + the split-word array materialized in its own
     # projection — the old inline form re-split the text per chunk
     # inside the Generate (and once more for the sequence bound)
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id", "text")
+    d = _spread(spark, sf_dir, "documents").select("doc_id", "text")
     dw = d.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
     chunks = dw.select(
         "doc_id",
@@ -5790,7 +5784,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides (partial-agg summation order)."""
     from .operators.pca import covariance_matrix
 
-    em = _spread(spark, _t(spark, sf_dir, "embeddings"))
+    em = _spread(spark, sf_dir, "embeddings")
     return covariance_matrix(em).select(
         "dim_i", "dim_j", F.round("cov", 6).alias("cov")
     )
@@ -6423,7 +6417,7 @@ def bpe_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair space is bounded by charset² (36² here), so the aggregate
     state is constant-size regardless of corpus bytes — the per-merge
     cost of distributed BPE training at 100 TB is one such pass."""
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     words = d.select(
         F.explode(
             F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
@@ -6512,7 +6506,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation is pinned in tests/test_bpe.py)."""
     from .operators.bpe import bpe_train
 
-    return bpe_train(_spread(spark, _t(spark, sf_dir, "documents")), k=8)
+    return bpe_train(_spread(spark, sf_dir, "documents"), k=8)
 
 
 def _bpe_encode_sql(k: int) -> str:
@@ -6553,7 +6547,7 @@ def bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.bpe import bpe_encode_counts
 
     return bpe_encode_counts(
-        _spread(spark, _t(spark, sf_dir, "documents")), k=8
+        _spread(spark, sf_dir, "documents"), k=8
     )
 
 
@@ -6588,7 +6582,7 @@ def boilerplate_dup_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join back — never doc×doc; at 100 TB this is the same
     two-pass profile as contamination_overlap, with the gram
     dictionary AQE-partitioned."""
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     # r06: tokens materialized in their own projection — the old inline
     # form re-ran the regexp per gram inside the Generate lambda.  The
     # gram is hashed as one 8-argument xxhash64 over the token columns
@@ -6678,7 +6672,7 @@ def exact_substr_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import exact_substr_dedup
 
     return exact_substr_dedup(
-        _spread(spark, _t(spark, sf_dir, "documents")), min_len=8
+        _spread(spark, sf_dir, "documents"), min_len=8
     )
 
 
@@ -6720,7 +6714,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint is justified — unlike the vocab-sized dims AQE now
     sizes), one broadcast join back, one per-doc aggregate; the corpus
     is scanned twice and never shuffled on a wide key."""
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         "lang",
@@ -6830,7 +6824,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus shuffles only on the 8-byte-bounded bucket ids, never on
     text.  Docs with <2 tokens have no bigram features: NULL score,
     keep=false, kept total via the documents left join."""
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     # r06: tokenize into a MATERIALIZED column first — the old inline
     # form put the regexp inside the generator's element_at lambda, so
     # the Generate re-evaluated regexp_extract_all per bigram (measured
@@ -7643,7 +7637,7 @@ def semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     yardstick; the production path at 100 TB is the LSH-blocked
     variant measured by `semantic_contamination_lsh_recall` below —
     same model as dedup_embedding_cosine vs dedup_embedding_lsh."""
-    v = _spread(spark, _t(spark, sf_dir, "embeddings")).select(
+    v = _spread(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("e"),
         (
@@ -7806,7 +7800,7 @@ def winnow_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import winnow_fingerprints
 
     fps = winnow_fingerprints(
-        _spread(spark, _t(spark, sf_dir, "documents")), k=_WINNOW_K, w=_WINNOW_W
+        _spread(spark, sf_dir, "documents"), k=_WINNOW_K, w=_WINNOW_W
     )
     return fps.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fps"),
@@ -7840,7 +7834,7 @@ def winnow_copy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import winnow_copy_pairs as _pairs
 
     return _pairs(
-        _spread(spark, _t(spark, sf_dir, "documents")),
+        _spread(spark, sf_dir, "documents"),
         k=_WINNOW_K,
         w=_WINNOW_W,
         min_shared=_WINNOW_MIN_SHARED,
@@ -8015,7 +8009,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle-gated measurement against the exact-jaccard twin)."""
     from .operators.dedup import minhash_lsh_pairs
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
         d, id_col="doc_id", text_col="text", block_col="source", threshold=0.7
     )
@@ -8026,7 +8020,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified with bit_count(xor)); all built-in column expressions."""
     from .operators.dedup import simhash_pairs
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    d = _spread(spark, sf_dir, "documents")
     # short same-vocab docs collide easily on simhash: keep a tight radius
     return simhash_pairs(d, id_col="doc_id", text_col="text", max_hamming=3)
 
@@ -8040,7 +8034,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import embedding_lsh_pairs
 
     return embedding_lsh_pairs(
-        _spread(spark, _t(spark, sf_dir, "embeddings")), dim=64, bands=16,
+        _spread(spark, sf_dir, "embeddings"), dim=64, bands=16,
         planes_per_band=2, threshold=0.45,
     )
 
@@ -8049,7 +8043,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH-bucketed ANN (scale path for ann_cosine_topk)."""
     from .operators.similarity import lsh_ann_topk
 
-    v = _spread(spark, _t(spark, sf_dir, "embeddings"))
+    v = _spread(spark, sf_dir, "embeddings")
     q = v.filter(F.col("vec_id") < 5)
     return lsh_ann_topk(q, v, k=10)
 
@@ -8059,7 +8053,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, n_probes cells scanned per query)."""
     from .operators.similarity import ivf_ann_topk
 
-    v = _spread(spark, _t(spark, sf_dir, "embeddings"))
+    v = _spread(spark, sf_dir, "embeddings")
     q = v.filter(F.col("vec_id") < 5)
     return ivf_ann_topk(q, v, k=10, n_lists=8, n_probes=2)
 
@@ -8073,7 +8067,7 @@ def knn_graph_mutual(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import knn_graph
 
     return knn_graph(
-        _spread(spark, _t(spark, sf_dir, "embeddings")), k=5, mutual=True,
+        _spread(spark, sf_dir, "embeddings"), k=5, mutual=True,
         n_lists=8, n_probes=6,
     )
 
@@ -8084,7 +8078,7 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall measured by ann_ivfpq_recall."""
     from .operators.similarity import ivfpq_ann_topk
 
-    v = _spread(spark, _t(spark, sf_dir, "embeddings"))
+    v = _spread(spark, sf_dir, "embeddings")
     q = v.filter(F.col("vec_id") < 5)
     return ivfpq_ann_topk(q, v, k=10, n_lists=8, n_probes=2)
 

@@ -122,3 +122,32 @@ def test_pick_representative_by_frequency_then_lex(spark):
     reps = {r.canonical_id: r.representative for r in pick_representative(mentions, entities).collect()}
     assert reps["x"] == "x"  # 2 mentions beats 1
     assert reps["p"] == "p"  # tie → lexicographic
+
+
+def test_distributed_round_budget_succeeds_or_raises(spark):
+    """At the round budget the star loop either has converged (an
+    unchanged fingerprint after the final round counts) or raises —
+    it never labels nodes from a graph that is not yet a star."""
+    chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(15)]
+    edges = spark.createDataFrame(chain, "src_entity string, dst_entity string")
+
+    def run(budget):
+        return {
+            r.entity_id: r.canonical_id
+            for r in connected_components(
+                edges, max_iterations=budget, small_graph_threshold=0
+            ).collect()
+        }
+
+    budget = 1
+    while True:
+        try:
+            got = run(budget)
+            break
+        except RuntimeError:
+            budget += 1
+            assert budget <= 25
+    assert len(got) == 16 and set(got.values()) == {"n00"}
+    assert budget > 1
+    with pytest.raises(RuntimeError, match="did not converge within"):
+        run(budget - 1)

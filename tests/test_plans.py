@@ -271,3 +271,15 @@ def test_funnel_is_two_aggregates_no_join(spark, sf_dir):
     plan = _plan(q.funnel_view_click_purchase(spark, sf_dir))
     assert "Join" not in plan, plan
     assert "Window" not in plan, plan
+
+
+def test_spread_decision_is_memoized_per_table(spark, sf_dir, tmp_path):
+    """_spread memoizes its split-count probe per (session, table): a
+    single-file table probed first must not decide the repartition of a
+    later table that already has defaultParallelism scan splits."""
+    par = spark.sparkContext.defaultParallelism
+    spark.range(par * 100).repartition(par).write.parquet(str(tmp_path / "many.parquet"))
+    assert q._t(spark, str(tmp_path), "many").rdd.getNumPartitions() >= par
+
+    assert "Repartition" in _optimized(q._spread(spark, sf_dir, "documents"))
+    assert "Repartition" not in _optimized(q._spread(spark, str(tmp_path), "many"))
