@@ -6,15 +6,12 @@ plus the reference's duplicate-id policy (keep-first-with-warning,
 /root/reference/userCode/assetGroups/config.py:133-141).
 
 The canonical member of a component is its lexicographically smallest
-entity (deterministic, partition-order-independent).  The *display*
-representative is chosen by a ranking window — most frequent surface
-form wins, ties broken lexicographically (SURVEY.md §2.5: the engine's
-`row_number()` tie-break).
+entity (deterministic, partition-order-independent).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import ENTITIES, enforce
@@ -34,31 +31,6 @@ def canonicalize_values(values: DataFrame, edges: DataFrame, value_col: str = "v
         .select("entity_id", "canonical_id")
     )
     return enforce(out, ENTITIES)
-
-
-def pick_representative(
-    mentions: DataFrame, entities: DataFrame, value_col: str = "value"
-) -> DataFrame:
-    """Per cluster, the most-frequent surface form (row_number window).
-
-    Returns (canonical_id, representative, n_mentions).
-    """
-    counted = (
-        mentions.select(F.col(value_col).alias("entity_id"))
-        .join(entities, "entity_id")
-        .groupBy("canonical_id", "entity_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("canonical_id").orderBy(F.desc("n"), F.asc("entity_id"))
-    return (
-        counted.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "canonical_id",
-            F.col("entity_id").alias("representative"),
-            F.col("n").alias("n_mentions"),
-        )
-    )
 
 
 def rewrite_triples(

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..schema import ENTITIES, enforce
+from ..schema import ENTITIES, enforce, local_frame
 
 MAX_ITERATIONS = 25
 
@@ -45,11 +45,14 @@ MAX_ITERATIONS = 25
 # distributed loop remains the correctness path for genuinely huge
 # vocabularies.  The gate is BYTE-aware, not just row-count-aware: a
 # row-count threshold alone would collect 100k edges of 1 KB entity
-# IRIs (~200 MB of Python strings) onto the driver; the byte budget is
-# measured from the actual id lengths in the same aggregate that counts
-# the edges, so the decision stays deterministic for a fixed edge set.
+# IRIs (~200 MB of Python strings) onto the driver.  Each edge may cost
+# at most SMALL_GRAPH_MAX_BYTES / SMALL_GRAPH_THRESHOLD driver bytes
+# (UTF-8 octets of both ids plus EDGE_OVERHEAD_BYTES of Python
+# tuple/str objects), so a collect of threshold + 1 edges stays within
+# the byte budget; the decision is a pure function of the edge set.
 SMALL_GRAPH_THRESHOLD = 100_000
 SMALL_GRAPH_MAX_BYTES = 32 * 1024 * 1024
+EDGE_OVERHEAD_BYTES = 120
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -88,8 +91,13 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return attach_small.union(attach_self).distinct()
 
 
-def _driver_union_find(spark, pairs: list[tuple[str, str]]) -> DataFrame:
-    """Union-find with path compression for driver-small graphs."""
+def _driver_union_find(spark, pairs) -> DataFrame:
+    """Union-find with path compression for driver-small graphs.
+
+    Duplicate edges are no-ops and a self-loop only registers its node,
+    which stays its own singleton component unless another edge joins
+    it.  The labels come back as an Arrow-built LocalRelation, so the
+    job that reads them runs no Python worker."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -101,19 +109,14 @@ def _driver_union_find(spark, pairs: list[tuple[str, str]]) -> DataFrame:
         return root
 
     for u, v in pairs:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
         ru, rv = find(u), find(v)
         if ru != rv:
             # lexicographic-min root keeps parity with the star loop
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
-        parent.setdefault(ru, ru)
-        parent.setdefault(rv, rv)
-    nodes = set()
-    for u, v in pairs:
-        nodes.add(u)
-        nodes.add(v)
-    rows = [(n, find(n)) for n in sorted(nodes)]
-    return spark.createDataFrame(rows, "entity_id string, canonical_id string")
+    return local_frame(spark, [(n, find(n)) for n in sorted(parent)], ENTITIES)
 
 
 def connected_components(
@@ -134,6 +137,13 @@ def connected_components(
     and coalesce to self).  Raises RuntimeError if the distributed loop
     does not converge within `max_iterations` rounds (the closure.py
     contract: a silently truncated labeling is worse than none).
+
+    Spark actions: the raw edges are checkpointed lazily, then either one
+    bounded collect (at most `small_graph_threshold` + 1 edge rows, none
+    over the per-edge byte cap) whose union-find labels come back as a
+    LocalRelation, or — past either bound, or with
+    `small_graph_threshold=0` — the distributed loop: one checkpoint
+    and one fingerprint job per round.
     """
     def fingerprint(df: DataFrame) -> tuple:
         row = df.agg(
@@ -142,19 +152,43 @@ def connected_components(
         ).first()
         return (row["n"], row["h"])
 
-    # r06: checkpoint the raw edge list once — `selfers` below re-reads
-    # it inside the FINAL output job, and without this the whole
-    # upstream pair-generation plan (e.g. simhash banding + verify) ran
-    # a second time just to find self-loops (measured ~0.7 s per run on
-    # the golden corpus).
+    # r06: checkpoint the raw edge list once — both paths read it again
+    # (the collect below; `selfers` inside the distributed path's FINAL
+    # output job), and without this the whole upstream pair-generation
+    # plan (e.g. simhash banding + verify) ran a second time (measured
+    # ~0.7 s per run on the golden corpus).  Lazy: the first action that
+    # reads it (the small-path collect, or `e` below) computes and keeps
+    # the blocks, so the checkpoint costs no job of its own.  An edge
+    # with a null end names no entity and is dropped.
     raw = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint()
+    ).dropna().localCheckpoint(eager=False)
+    spark = raw.sparkSession
+
+    # Small path: ONE collect of at most threshold + 1 edge rows (self-
+    # loops and duplicates included — union-find handles both) decides
+    # the path AND carries the graph.  An edge over the per-edge byte
+    # cap comes back with null ids, which sends the graph to the
+    # distributed loop.  The take scans one partition, then 4× more per
+    # job, so a one-partition edge list (the common small case) costs a
+    # single job and a large one is still computed in parallel.
+    if small_graph_threshold > 0:
+        cap = small_graph_max_bytes // small_graph_threshold
+        fits = (
+            F.octet_length("u") + F.octet_length("v") + F.lit(EDGE_OVERHEAD_BYTES)
+        ) <= F.lit(cap)
+        rows = (
+            raw.select(F.when(fits, F.col("u")).alias("u"), F.when(fits, F.col("v")).alias("v"))
+            .limit(small_graph_threshold + 1)
+            .collect()
+        )
+        if len(rows) <= small_graph_threshold and all(r["u"] is not None for r in rows):
+            return _driver_union_find(spark, rows)
+
     e = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
     # Nodes whose ONLY edges are self-loops: singleton components.  The
     # anti-join is over two node-distinct sets (vocabulary-bounded, far
-    # smaller than the edge list), so this costs one cheap extra job —
-    # and only when self-loops exist at all (the count gate below).
+    # smaller than the edge list), so it rides on the output job.
     selfers = raw.filter(F.col("u") == F.col("v")).select("u").distinct()
     touched = e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
     singletons = (
@@ -165,25 +199,9 @@ def connected_components(
     def with_singletons(out: DataFrame) -> DataFrame:
         return enforce(out.unionByName(singletons), ENTITIES)
 
-    # one aggregate decides the path: edge count AND estimated collect
-    # size — both must fit the driver budget.  octet_length, not length:
-    # character counts undercount multi-byte UTF-8 IRIs up to 4×; plus
-    # ~120 B/edge for Python tuple/str object overhead on the driver.
-    size_row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum((F.octet_length("u") + F.octet_length("v")).cast("long")), F.lit(0)
-        ).alias("payload_bytes"),
-    ).first()
-    n_edges = size_row["n"]
-    est_bytes = size_row["payload_bytes"] + n_edges * 120
-    if n_edges == 0:
-        return with_singletons(e.sparkSession.createDataFrame([], ENTITIES))
-    if n_edges <= small_graph_threshold and est_bytes <= small_graph_max_bytes:
-        pairs = [(r["u"], r["v"]) for r in e.collect()]
-        return with_singletons(_driver_union_find(e.sparkSession, pairs))
-
     prev = fingerprint(e)
+    if prev[0] == 0:
+        return with_singletons(local_frame(spark, [], ENTITIES))
     for _ in range(max_iterations):
         e = _small_star(_large_star(e)).localCheckpoint()
         cur = fingerprint(e)

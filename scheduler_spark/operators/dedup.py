@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schema import SHINGLE_VOCAB, local_frame
+
 
 def bucket_cap_stats(banded: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
     """Observability for every banded-LSH bucket cap: one row of
@@ -64,21 +66,6 @@ def simhash_banded(sh: DataFrame) -> DataFrame:
                 ]
             )
         ).alias("band", "chunk"),
-    )
-
-
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Groups of byte-identical (normalized) texts; keeper = min id."""
-    fp = F.sha2(F.trim(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", " ")), 256)
-    return (
-        df.select(F.col(id_col).alias("doc_id"), fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.min("doc_id").alias("keeper_doc_id"),
-            F.collect_set("doc_id").alias("member_ids"),
-        )
-        .filter(F.col("n_copies") > 1)
     )
 
 
@@ -261,8 +248,7 @@ def _minhash_banded(
     """(doc_id, block, band, bucket) with the per-bucket cap applied.
 
     All hash seeds are literals, so two frames banded with the same
-    (n, num_hashes, bands) parameters are bucket-compatible — the
-    property the incremental index relies on."""
+    (n, num_hashes, bands) parameters are bucket-compatible."""
     rows_per_band = num_hashes // bands
 
     # ONE explode + grouped min-aggregates replace num_hashes
@@ -402,9 +388,7 @@ def _bitmap_verify(
     if not 0 < len(vocab) <= max_vocab:
         return None
     n_words = (len(vocab) + 63) // 64
-    vdf = spark.createDataFrame(
-        [(h, i) for i, h in enumerate(vocab)], "h long, idx int"
-    )
+    vdf = local_frame(spark, [(h, i) for i, h in enumerate(vocab)], SHINGLE_VOCAB)
     ex = base.select("doc_id", F.size("s").alias("n"), F.explode("s").alias("h"))
     bits = ex.join(F.broadcast(vdf), "h").select(
         "doc_id",
@@ -460,8 +444,8 @@ def _verify_exact_jaccard(
     Size-band prune before the intersect (J ≥ t forces t·|B| ≤ |A|),
     then |A∪B| = |A|+|B|−|A∩B| with single-reference filter algebra as
     in the exact twin (t·(|A|+|B|) ≤ (1+t)·|A∩B| ⇔ J ≥ t).  Shared by
-    the self-join path (minhash_lsh_pairs) and the incremental
-    batch-vs-index path so the verify semantics can never diverge."""
+    minhash_lsh_pairs and prefix_jaccard_pairs so the verify semantics
+    can never diverge."""
     joined = cand.join(
         left_sets.select(
             F.col("doc_id").alias(left_id), F.col("s").alias("sa"), F.col("n").alias("na")
@@ -484,83 +468,6 @@ def _verify_exact_jaccard(
             left_id, right_id,
             F.round(inter / (F.col("na") + F.col("nb") - inter), 6).alias("jac"),
         )
-    )
-
-
-# -- incremental near-dup: persisted index, match the new batch only --------
-
-def build_minhash_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = None,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 16,
-    max_bucket: int = 512,
-) -> tuple[DataFrame, DataFrame]:
-    """Persistable near-dup index of a corpus: (buckets, sets).
-
-    buckets(doc_id, block, band, bucket) — ids-only banded index, the
-    per-bucket cap applied at build time; sets(doc_id, s, n) — hashed
-    shingle sets for exact verification.  Write both through the
-    catalog; an incoming crawl batch is then deduped against the corpus
-    WITHOUT rescanning corpus text (the 100 TB property: per-batch cost
-    scales with the batch, the corpus contributes only equi-join lookups
-    into these two tables).  The seeds are literals, so an index built
-    yesterday is bucket-compatible with a batch banded today under the
-    same (n, num_hashes, bands).
-    """
-    base = _minhash_base(df, id_col, text_col, block_col, n)
-    buckets = _minhash_banded(base, num_hashes, bands, max_bucket)
-    sets = base.select("doc_id", "s", F.size("s").alias("n"))
-    return buckets, sets
-
-
-def match_against_index(
-    new_df: DataFrame,
-    index_buckets: DataFrame,
-    index_sets: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = None,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 16,
-    threshold: float = 0.7,
-    max_bucket: int = 512,
-) -> DataFrame:
-    """New-batch docs vs the persisted corpus index → verified near-dup
-    matches (new_doc, corpus_doc, jac ≥ threshold).
-
-    Band the batch with the SAME literal seeds, equi-join bucket keys
-    against the index, dedup candidates, then verify exact Jaccard
-    using the batch's freshly-computed shingle sets and the index's
-    persisted ones — precision is exact, only LSH recall is
-    approximate (same contract as minhash_lsh_pairs, whose recall gate
-    measures the identical banding scheme).  Self-matches (same id on
-    both sides, e.g. re-crawled unchanged docs) are kept — flagging a
-    re-crawl as a duplicate of its own prior version is the desired
-    incremental-ingest outcome.
-    """
-    base_new = _minhash_base(new_df, id_col, text_col, block_col, n)
-    banded_new = _minhash_banded(base_new, num_hashes, bands, max_bucket)
-    cand = (
-        banded_new.select(
-            "block", "band", "bucket", F.col("doc_id").alias("new_doc")
-        )
-        .join(
-            index_buckets.select(
-                "block", "band", "bucket", F.col("doc_id").alias("corpus_doc")
-            ),
-            ["block", "band", "bucket"],
-        )
-        .select("new_doc", "corpus_doc")
-        .dropDuplicates(["new_doc", "corpus_doc"])
-    )
-    new_sets = base_new.select("doc_id", "s", F.size("s").alias("n"))
-    return _verify_exact_jaccard(
-        cand, new_sets, index_sets, "new_doc", "corpus_doc", threshold
     )
 
 

@@ -68,11 +68,6 @@ FEATURES = T.StructType(
 _WKB_POINT = 1
 
 
-def wkb_point(x: float, y: float) -> bytes:
-    """Little-endian WKB for POINT(x y) — the test-side reference."""
-    return struct.pack("<BIdd", 1, _WKB_POINT, x, y)
-
-
 def wkb_point_udf():
     """Vectorized WKB POINT encoder: (x, y) doubles → binary."""
 
@@ -86,13 +81,6 @@ def wkb_point_udf():
         )
 
     return F.pandas_udf(encode, T.BinaryType())
-
-
-def parse_wkb_point(b: bytes) -> tuple[float, float]:
-    """Decode a little-endian WKB POINT (round-trip test helper)."""
-    order, gtype, x, y = struct.unpack("<BIdd", b)
-    assert order == 1 and gtype == _WKB_POINT
-    return x, y
 
 
 def synth_features(spark: SparkSession, n: int = 500, box_deg: float = 0.5) -> DataFrame:

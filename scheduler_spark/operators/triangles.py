@@ -19,9 +19,8 @@ wedges; the choice of order is the whole scale story:
 
 Both orientations are pure DataFrame equi-joins (shuffle on node ids,
 never a cross product); the count is orientation-invariant, which the
-equivalence test pins (tests/test_triangles.py) and the
-kg_triangle_count oracle keeps checkable with the simpler id-ordered
-SQL.
+kg_triangle_count oracle's id-ordered SQL and tests/test_triangles.py
+(plain-Python counts) check.
 """
 
 from __future__ import annotations
@@ -71,26 +70,6 @@ def triangle_count(
     closing = o.select(F.col("u").alias("b"), F.col("v").alias("c"))
     return wedges.join(closing, ["b", "c"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_triangles")
-    )
-
-
-def triangle_count_id_ordered(
-    edges: DataFrame, src: str = "src_entity", dst: str = "dst_entity"
-) -> DataFrame:
-    """The id-ordered variant (the oracle's declarative shape) — kept
-    as the equivalence yardstick; quadratic on celebrity nodes."""
-    pairs = (
-        edges.filter(F.col(src) != F.col(dst))
-        .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .distinct()
-    )
-    e1 = pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = pairs.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = pairs.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    return (
-        e1.join(e2, "y")
-        .join(e3, ["x", "z"])
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     )
 
 

@@ -28,7 +28,12 @@ Quarantine accounting, partition fingerprints, and the vanished-source
 set all derive from ONE materialized metadata pass over the corpus
 (repo, path, commit, content_sha, reason — ~100 B/row, localCheckpoint
 holds it at any content scale), so neither the clean nor the dirty path
-ever rescans the content column before extraction.
+ever rescans the content column before extraction.  The run's Spark
+actions: that pass; one collect of one row per source (quarantine
+count, vanished and dirty sets); then, on the dirty path, extraction,
+LSH, CC's one bounded edge collect, one collect of the lineage counters
+over the cached triples, and the commits.  Driver-built frames (dirty set,
+lineage rows) are Arrow LocalRelations that no Python worker re-scans.
 """
 
 from __future__ import annotations
@@ -43,8 +48,11 @@ from .operators.canonicalize import canonicalize_values
 from .operators.extract import extract_mentions, with_content_sha
 from .operators.linking import link_by_alias, lsh_candidate_pairs
 from .operators.materialize import build_triples
-from .plans.checkpoint import dirty_partitions, fingerprint_partitions, updated_checkpoint
+from .plans.checkpoint import (
+    dirty_partitions, fingerprint_partitions, sync_plan, updated_checkpoint,
+)
 from .plans.lineage import counters_property, stage_counters
+from .schema import CHECKPOINT, local_frame
 
 MENTIONS_TABLE = "mentions"
 TRIPLES_TABLE = "triples"
@@ -183,16 +191,21 @@ def run_pipeline(
         .select("repo", "path", "commit", "lang", "content_sha", "_reason")
         .localCheckpoint()
     )
-    bad = slim.filter(F.col("_reason").isNotNull())
-    n_quarantined = bad.count()
-    fp = fingerprint_partitions(slim.filter(F.col("_reason").isNull())).localCheckpoint()
-    checkpoint = catalog.read(CHECKPOINT_TABLE) if catalog.exists(CHECKPOINT_TABLE) else None
+    fp = fingerprint_partitions(slim.filter(F.col("_reason").isNull()))
+    ckpt_path = catalog.table_path(CHECKPOINT_TABLE)  # known schema: no footer-inference job
+    checkpoint = spark.read.schema(CHECKPOINT).parquet(ckpt_path) if catalog.exists(CHECKPOINT_TABLE) else None
+    # ONE collect of one row per source (bounded by the source count and
+    # the checkpoint's own cardinality) yields the quarantine count, the
+    # vanished set and the dirty set — see plans/checkpoint.sync_plan
+    dirty = dirty_partitions(fp, checkpoint)
+    plan = sync_plan(slim, dirty, checkpoint).collect()
+    n_quarantined = sum(r["n_bad"] or 0 for r in plan)
     # the deadline precedes even the quarantine diagnostic append, so a
     # run that times out here has written nothing at all
     _deadline("metadata")
     if n_quarantined:
         catalog.append(
-            bad.select(
+            slim.filter(F.col("_reason").isNotNull()).select(
                 "repo", "path", "commit",
                 F.col("_reason").alias("reason"),
                 F.lit(run_id).alias("run_id"),
@@ -215,19 +228,10 @@ def run_pipeline(
     # delete_partitions EXECUTION is deferred into the terminal write
     # block (after the last deadline check), so a timed-out run never
     # half-prunes — see RunTimeoutError.
-    n_pruned = 0
-    vanished_keys: list[str] = []
-    if checkpoint is not None:
-        present = slim.select(F.col("repo").alias("partition")).distinct()
-        vanished = (
-            checkpoint.select("partition")
-            .join(present, "partition", "left_anti")
-            .collect()
-        )
-        if vanished:
-            vanished_keys = sorted(r["partition"] for r in vanished)
-            n_pruned = len(vanished_keys)
-            checkpoint = checkpoint.join(present, "partition", "left_semi")
+    vanished_keys = sorted(r["partition"] for r in plan if r["n_bad"] is None)
+    n_pruned = len(vanished_keys)
+    if vanished_keys:
+        checkpoint = checkpoint.filter(~F.col("partition").isin(vanished_keys))
 
     def _prune_vanished() -> None:
         for table in (TRIPLES_TABLE, MENTIONS_TABLE):
@@ -237,12 +241,11 @@ def run_pipeline(
                     properties={"run_id": run_id},
                 )
 
-    # localCheckpoint (eager), not cache(): this plan READS the
-    # checkpoint parquet that step 5 overwrites, and a cached plan is
-    # invalidated by that write — any post-write recompute would see the
-    # *new* checkpoint and silently select zero partitions.
-    dirty = dirty_partitions(fp, checkpoint).localCheckpoint()
-    n_dirty = dirty.count()
+    # driver-held dirty set: the checkpoint upsert reads a LocalRelation,
+    # never the checkpoint parquet that the final commit overwrites
+    dirty_rows = sorted((r["partition"], r["fingerprint"], r["rows"]) for r in plan if r["fingerprint"])
+    dirty = local_frame(spark, dirty_rows, dirty.schema).coalesce(1)  # one checkpoint file
+    n_dirty = len(dirty_rows)
     if n_dirty == 0:
         if n_pruned:
             # nothing to recompute, but the prune must still commit —
@@ -259,16 +262,12 @@ def run_pipeline(
 
     _deadline("plan")
     # second (and final) corpus scan: content re-read only as the
-    # extraction input; every metadata consumer (in_lang triples below)
-    # reads the checkpointed slim frame instead
-    dirty_keys = dirty.select(F.col("partition").alias("repo"))
-    good = files.withColumn("_reason", reason).filter(F.col("_reason").isNull()).drop("_reason")
-    subset = with_content_sha(good).join(dirty_keys, "repo", "left_semi")
-    meta_subset = (
-        slim.filter(F.col("_reason").isNull())
-        .drop("_reason")
-        .join(dirty_keys, "repo", "left_semi")
-    )
+    # extraction input, restricted to the dirty sources by a filter the
+    # optimizer pushes below the content read; every metadata consumer
+    # (in_lang triples below) reads the checkpointed slim frame instead
+    in_dirty = F.col("repo").isin([p for p, _, _ in dirty_rows])
+    subset = with_content_sha(files.filter(in_dirty & reason.isNull()))
+    meta_subset = slim.filter(in_dirty & F.col("_reason").isNull()).drop("_reason")
 
     # -- 2. salted extraction (mega-repo skew bound + per-source caps) ---
     n_parts = extraction_partitions or spark.sparkContext.defaultParallelism
@@ -289,10 +288,14 @@ def run_pipeline(
     ident_entities = canonicalize_values(ident_mentions.select("value"), edges)
 
     # -- 4. materialize --------------------------------------------------
+    # one action over the cached triples: the per-source lineage counters,
+    # from which n_triples, the snapshot properties and the lineage append
+    # frame (Arrow-built) all come
     try:
         _deadline("link")
         triples = build_triples(meta_subset, linked, ident_mentions, ident_entities, run_id).cache()
-        n_triples = triples.count()
+        lineage = stage_counters(triples, "src_partition", run_id, "materialize")
+        counters = lineage.collect()
         _deadline("materialize")
     except RunTimeoutError:
         # release cached blocks before surfacing the cancel — a
@@ -301,31 +304,27 @@ def run_pipeline(
         if "triples" in locals():
             triples.unpersist()
         raise
-    lineage = stage_counters(triples, "src_partition", run_id, "materialize").cache()
-    props = counters_property(lineage)
-    props["run_id"] = run_id
+    props = {**counters_property(counters), "run_id": run_id}
 
     _prune_vanished()
     catalog.overwrite_partitions(
-        mentions.withColumn("src_partition", F.col("repo")),
-        MENTIONS_TABLE,
-        ["src_partition"],
-        properties={"run_id": run_id, "stage": "harvest"},
+        mentions.withColumn("src_partition", F.col("repo")), MENTIONS_TABLE,
+        ["src_partition"], properties={"run_id": run_id, "stage": "harvest"},
     )
     snapshot_id = catalog.overwrite_partitions(
         triples, TRIPLES_TABLE, ["src_partition"], properties=props
     )
+    lineage = local_frame(spark, counters, lineage.schema).coalesce(1)
     catalog.append(lineage, LINEAGE_TABLE, properties={"run_id": run_id})
 
     # -- 5. commit checkpoint -------------------------------------------
-    new_ckpt = updated_checkpoint(checkpoint, dirty, snapshot_id)
     # materialize before overwrite: the plan reads the table being replaced
-    new_ckpt = new_ckpt.localCheckpoint()
+    new_ckpt = updated_checkpoint(checkpoint, dirty, snapshot_id).localCheckpoint()
     catalog.overwrite(new_ckpt, CHECKPOINT_TABLE, properties={"run_id": run_id})
 
     mentions.unpersist()
     triples.unpersist()
     return PipelineResult(
-        run_id, n_dirty, n_triples, snapshot_id,
+        run_id, n_dirty, props["total_rows"], snapshot_id,
         n_quarantined=n_quarantined, n_pruned_partitions=n_pruned,
     )

@@ -12,6 +12,10 @@ incremental pull transfers nothing when the bytesum is unchanged
 - `dirty_partitions` anti-joins current fingerprints against the
   checkpoint table: only changed/new partitions are recomputed
   (≈ `filter_partitions` + bytesum skip).
+- `sync_plan` unions the per-source quarantine counts, the dirty set and
+  the checkpoint's partitions into ONE frame of one row per source, so a
+  run decides everything (quarantine count, vanished sources, dirty
+  sources) from a single bounded collect.
 - after a successful stage, `updated_checkpoint` upserts the processed
   partitions (the reference's idempotent per-source sync).
 """
@@ -56,6 +60,39 @@ def dirty_partitions(current: DataFrame, checkpoint: DataFrame | None) -> DataFr
     return (
         current.join(clean, ["partition", "fingerprint"], "left_anti")
         .select("partition", "fingerprint", "rows")
+    )
+
+
+def sync_plan(
+    slim: DataFrame, dirty: DataFrame, checkpoint: DataFrame | None, key: str = "repo"
+) -> DataFrame:
+    """One row per source in the corpus or the checkpoint:
+    (partition, n_bad, fingerprint, rows).
+
+    `slim` holds every corpus row with its `_reason` (null when the row
+    is valid); `dirty` is `dirty_partitions`' output.  A source present
+    in the corpus has a non-null `n_bad` (its quarantined rows, possibly
+    0) — null means the source vanished and only the checkpoint knows
+    it.  `fingerprint`/`rows` are non-null exactly for dirty sources.
+    The three inputs are unioned and grouped once (one exchange, no
+    joins), and the row count is bounded by |corpus sources ∪
+    checkpoint rows|.
+    """
+    no_long, no_str = F.lit(None).cast("long"), F.lit(None).cast("string")
+    out = slim.select(
+        F.col(key).alias("partition"),
+        F.col("_reason").isNotNull().cast("long").alias("bad"),
+        no_str.alias("fingerprint"),
+        no_long.alias("rows"),
+    ).unionByName(dirty.select("partition", no_long.alias("bad"), "fingerprint", "rows"))
+    if checkpoint is not None:
+        out = out.unionByName(
+            checkpoint.select("partition", no_long.alias("bad"), no_str.alias("fingerprint"), no_long.alias("rows"))
+        )
+    return out.groupBy("partition").agg(
+        F.sum("bad").alias("n_bad"),
+        F.max("fingerprint").alias("fingerprint"),
+        F.max("rows").alias("rows"),
     )
 
 

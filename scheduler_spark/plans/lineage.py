@@ -4,6 +4,9 @@ log-level accounting, /root/reference/userCode/lib/dagster.py:33-59).
 
 Counters ride on every snapshot commit as summary properties and are
 queryable as a DataFrame — `groupBy(partition).agg(...)`, all built-in.
+The pipeline collects them in ONE action (one row per source
+partition); the snapshot totals, the top-N detail and the lineage
+append frame are all built from those rows on the driver.
 """
 
 from __future__ import annotations
@@ -30,22 +33,17 @@ def stage_counters(df: DataFrame, partition_col: str, run_id: str, stage: str) -
     )
 
 
-def counters_property(counters: DataFrame, top_n: int = 50) -> dict:
-    """Condense counters into a snapshot summary property dict.
+def counters_property(rows: list, top_n: int = 50) -> dict:
+    """Condense collected `stage_counters` rows into a snapshot summary
+    property dict.
 
     Totals always; per-partition detail capped at top_n partitions by
-    rows (snapshot properties must stay small — full detail lives in
-    the lineage table itself).
+    rows, ties by partition name (snapshot properties must stay small —
+    full detail lives in the lineage table itself).
     """
-    totals = counters.agg(
-        F.sum("rows").alias("rows"), F.sum("approx_bytes").alias("approx_bytes")
-    ).first()
-    top = [
-        {"partition": r["src_partition"], "rows": r["rows"]}
-        for r in counters.orderBy(F.desc("rows")).limit(top_n).collect()
-    ]
+    top = sorted(rows, key=lambda r: (-r["rows"], r["src_partition"]))[:top_n]
     return {
-        "total_rows": int(totals["rows"] or 0),
-        "total_approx_bytes": int(totals["approx_bytes"] or 0),
-        "top_partitions": top,
+        "total_rows": sum(r["rows"] for r in rows),
+        "total_approx_bytes": sum(r["approx_bytes"] or 0 for r in rows),
+        "top_partitions": [{"partition": r["src_partition"], "rows": r["rows"]} for r in top],
     }

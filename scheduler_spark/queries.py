@@ -2840,9 +2840,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if 0 < len(vocab) <= 16384:
         n_words = (len(vocab) + 63) // 64
-        vdf = spark.createDataFrame(
-            [(h, i) for i, h in enumerate(vocab)], "h long, idx int"
-        )
+        from .schema import SHINGLE_VOCAB, local_frame
+
+        vdf = local_frame(spark, [(h, i) for i, h in enumerate(vocab)], SHINGLE_VOCAB)
         ex = d.select("doc_id", "source", "n", F.explode("s").alias("h"))
         bits = ex.join(F.broadcast(vdf), "h").select(
             "doc_id", "source", "n",

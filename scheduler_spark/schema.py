@@ -7,7 +7,7 @@ docs/hdt.md:12-21); we declare and enforce them at stage boundaries.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -118,6 +118,12 @@ ALIASES = T.StructType(
     ]
 )
 
+# Shingle-hash vocabulary index of the bitmap Jaccard verify
+# (operators/dedup._bitmap_verify and its inline copy in queries.py).
+SHINGLE_VOCAB = T.StructType(
+    [T.StructField("h", T.LongType()), T.StructField("idx", T.IntegerType())]
+)
+
 
 def _nullable(dt: T.DataType) -> T.DataType:
     """Recursively relax nullability — cast targets must be nullable."""
@@ -144,3 +150,23 @@ def enforce(df: DataFrame, schema: T.StructType) -> DataFrame:
             raise ValueError(f"missing required column {field.name!r}; have {sorted(have)}")
         cols.append(df[field.name].cast(_nullable(field.dataType)).alias(field.name))
     return df.select(*cols)
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-held rows (tuples or Rows in `schema` order) as a JVM
+    ``LocalRelation``, built through Arrow.
+
+    ``spark.createDataFrame(list)`` plans as a ``LogicalRDD`` of pickled
+    rows that Python workers deserialize again in every job that reads
+    the frame; an Arrow table is handed to the JVM once and needs no
+    Python worker afterwards (and no Arrow session conf either).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.table(
+        {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)}, schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

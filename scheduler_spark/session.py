@@ -120,8 +120,3 @@ def get_spark(
     _ship_package(spark)
     return spark
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

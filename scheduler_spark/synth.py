@@ -22,15 +22,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schema import ALIASES, FILES, enforce
+from .schema import ALIASES, FILES, enforce, local_frame
 
 ENTITY_COUNT = 20
 LANGS = ["python", "go", "java"]
 MEGA_REPO = "mega/monorepo"
 
-# Distinct word stems for planted identifiers — chosen pairwise-dissimilar
-# so 3-gram Jaccard cleanly separates same-stem spelling variants
-# (snake vs camel, J≈0.55) from cross-stem pairs (J≲0.3).
+# Distinct word stems for planted identifiers.  The two spellings of one
+# stem (snake vs camel) have lowercase 3-gram Jaccard 0.55-0.67, but the
+# shared `_worker`/`Worker` suffix lifts cross-stem pairs to J 0.20-0.50
+# (e.g. alpha_worker-lima_worker 0.462): 40 of the 760 cross-stem
+# spelling pairs reach the 0.4 LSH threshold, so LSH + CC merges some
+# distinct stems into one entity (a known over-merge, not a property
+# the pipeline relies on).
 IDENT_WORDS = [
     "alpha", "bravo", "delta", "echo", "foxtrot", "golf", "hotel",
     "india", "juliet", "kilo", "lima", "mike", "november", "oscar",
@@ -63,9 +67,9 @@ def alias_rows() -> list[tuple[str, str]]:
 
 
 def alias_df(spark: SparkSession) -> DataFrame:
-    return enforce(
-        spark.createDataFrame(alias_rows(), schema=ALIASES), ALIASES
-    )
+    """The alias dictionary as an Arrow-built LocalRelation (no Python
+    worker re-scans it in the jobs that join it)."""
+    return local_frame(spark, alias_rows(), ALIASES)
 
 
 # -- column-expression helpers (shared by content builder and oracle) -------

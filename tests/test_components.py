@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from scheduler_spark.operators.canonicalize import canonicalize_values, pick_representative
+from scheduler_spark.operators.canonicalize import canonicalize_values
 from scheduler_spark.operators.components import connected_components
 
 
@@ -111,19 +111,6 @@ def test_canonicalize_includes_singletons(spark):
     assert got == {"a": "a", "b": "a", "solo": "solo"}
 
 
-def test_pick_representative_by_frequency_then_lex(spark):
-    mentions = spark.createDataFrame(
-        [("x",), ("x",), ("y",), ("p",), ("q",)], "value string"
-    )
-    entities = spark.createDataFrame(
-        [("x", "x"), ("y", "x"), ("p", "p"), ("q", "p")],
-        "entity_id string, canonical_id string",
-    )
-    reps = {r.canonical_id: r.representative for r in pick_representative(mentions, entities).collect()}
-    assert reps["x"] == "x"  # 2 mentions beats 1
-    assert reps["p"] == "p"  # tie → lexicographic
-
-
 def test_distributed_round_budget_succeeds_or_raises(spark):
     """At the round budget the star loop either has converged (an
     unchanged fingerprint after the final round counts) or raises —
@@ -151,3 +138,59 @@ def test_distributed_round_budget_succeeds_or_raises(spark):
     assert budget > 1
     with pytest.raises(RuntimeError, match="did not converge within"):
         run(budget - 1)
+
+
+def _driver_path(df) -> bool:
+    """The driver path returns an Arrow-built LocalRelation; the
+    distributed loop's output reads checkpointed (LogicalRDD) frames."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
+def _labels(df):
+    return {r.entity_id: r.canonical_id for r in df.collect()}
+
+
+def test_small_path_threshold_boundary(spark):
+    """Exactly `small_graph_threshold` edges take the driver path; one
+    more takes the distributed loop — with identical labels."""
+    chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(10)] + [("y", "z")]
+    edges = spark.createDataFrame(chain, "src_entity string, dst_entity string")
+    at = connected_components(edges, small_graph_threshold=len(chain))
+    over = connected_components(edges, small_graph_threshold=len(chain) - 1)
+    assert _driver_path(at) and not _driver_path(over)
+    assert _labels(at) == _labels(over)
+    assert set(_labels(at).values()) == {"n00", "y"}
+
+
+def test_small_path_byte_cap_boundary(spark):
+    """The per-edge byte cap (max_bytes / threshold) is inclusive: an
+    edge costing exactly the cap stays on the driver path, one byte
+    over sends the graph to the distributed loop."""
+    from scheduler_spark.operators.components import EDGE_OVERHEAD_BYTES
+
+    pairs = [("aa", "bb"), ("bb", "cc")]  # 4 octets + overhead per edge
+    edges = spark.createDataFrame(pairs, "src_entity string, dst_entity string")
+    cap = 4 + EDGE_OVERHEAD_BYTES
+    fits = connected_components(edges, small_graph_threshold=2, small_graph_max_bytes=2 * cap)
+    over = connected_components(edges, small_graph_threshold=2, small_graph_max_bytes=2 * cap - 2)
+    assert _driver_path(fits) and not _driver_path(over)
+    assert _labels(fits) == _labels(over) == {"aa": "aa", "bb": "aa", "cc": "aa"}
+
+
+def test_driver_path_self_loops_and_duplicates(spark):
+    """Self-loop-only nodes stay singleton components and duplicate or
+    reversed edges change nothing — on the driver path, matching the
+    distributed loop."""
+    pairs = [
+        ("b", "a"), ("a", "b"), ("b", "a"),  # duplicate and reversed
+        ("s", "s"), ("s", "s"),  # self-loop-only node
+        ("c", "c"), ("d", "c"),  # self-loop on a node with a real edge
+    ]
+    edges = spark.createDataFrame(pairs, "src_entity string, dst_entity string")
+    fast = connected_components(edges, small_graph_threshold=len(pairs))
+    dist = connected_components(edges, small_graph_threshold=0)
+    assert _driver_path(fast)
+    want = {"a": "a", "b": "a", "s": "s", "c": "c", "d": "c"}
+    assert _labels(fast) == _labels(dist) == want
+    assert fast.count() == len(want)  # one row per node

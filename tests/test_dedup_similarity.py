@@ -5,26 +5,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from scheduler_spark.operators.dedup import (
-    exact_duplicates,
     ngram_jaccard_pairs,
     simhash64,
     simhash_pairs,
 )
 from scheduler_spark.operators.similarity import brute_force_topk, ivf_ann_topk, lsh_ann_topk
-
-
-def test_exact_duplicates_normalized(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "Hello, World!"),
-            (2, "hello world"),  # same after normalization
-            (3, "something else"),
-        ],
-        "doc_id long, text string",
-    )
-    groups = exact_duplicates(df, "doc_id", "text").collect()
-    assert len(groups) == 1
-    assert groups[0].n_copies == 2 and groups[0].keeper_doc_id == 1
 
 
 def test_simhash_identical_and_disjoint(spark):

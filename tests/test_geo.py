@@ -5,6 +5,8 @@ column set; export.py:147-153 bbox/Hilbert/row-group layout)."""
 
 from __future__ import annotations
 
+import struct
+
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
@@ -13,10 +15,15 @@ from scheduler_spark.operators.geo import (
     FEATURES,
     bbox_intersect_join,
     bbox_intersect_join_gridded,
-    parse_wkb_point,
     synth_features,
-    wkb_point,
 )
+
+def parse_wkb_point(b: bytes) -> tuple[float, float]:
+    """Decode a little-endian WKB POINT."""
+    order, gtype, x, y = struct.unpack("<BIdd", b)
+    assert order == 1 and gtype == 1
+    return x, y
+
 
 EXPECTED_COLUMNS = {
     "geometry", "id", "geoconnex_sitemap", "feature_name", "feature_description",
@@ -36,7 +43,7 @@ def test_wkb_geometry_round_trip(spark):
     for r in rows:
         x, y = parse_wkb_point(bytes(r.geometry))
         assert abs(x - r.bbox.xmin) < 1e-12 and abs(y - r.bbox.ymin) < 1e-12
-        assert bytes(r.geometry) == wkb_point(r.bbox.xmin, r.bbox.ymin)
+        assert bytes(r.geometry) == struct.pack("<BIdd", 1, 1, r.bbox.xmin, r.bbox.ymin)
     # coordinates stay in range
     assert all(-180 <= r.bbox.xmin <= r.bbox.xmax <= 180.5 for r in rows)
 

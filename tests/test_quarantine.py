@@ -17,11 +17,11 @@ from scheduler_spark.pipeline import (
 from scheduler_spark.synth import alias_df, synth_files
 
 
-def _with_bad_rows(spark, n=100):
+def _with_bad_rows(spark, n=100, repo="bad/repo"):
     good = synth_files(spark, n_files=n)
     bad = spark.createDataFrame(
         [
-            ("bad/repo", "null.py", "a" * 40, "python", None),
+            (repo, "null.py", "a" * 40, "python", None),
         ],
         "repo string, path string, commit string, lang string, content string",
     )
@@ -90,13 +90,9 @@ def test_quarantine_count_rides_the_fingerprint_scan(spark, tmp_path):
     )
 
 
-def test_dirty_path_quarantine_write_does_not_rescan(spark, tmp_path):
-    """The quarantine WRITE must reuse the metadata pass: across a
-    whole dirty run the bad row's content is read exactly twice — the
-    metadata scan and the extraction-input scan (whose filter must
-    still READ every row to exclude it).  A recompute-the-bad-set
-    implementation adds a third full pass; the old in_lang-from-corpus
-    triples branch added a fourth."""
+def _bad_row_reads(spark, tmp_path, repo):
+    """(times the bad row's content was read, result) across one dirty
+    run over a corpus with one null-content row in `repo`."""
     bad_probes = spark.sparkContext.accumulator(0)
 
     @F.udf("string")
@@ -105,12 +101,36 @@ def test_dirty_path_quarantine_write_does_not_rescan(spark, tmp_path):
             bad_probes.add(1)
         return c
 
-    files = _with_bad_rows(spark, n=60).withColumn("content", probe("content"))
+    files = _with_bad_rows(spark, n=60, repo=repo).withColumn("content", probe("content"))
     catalog = Catalog(root=str(tmp_path), spark=spark)
     res = run_pipeline(spark, files, alias_df(spark), catalog, run_id="d1")
     assert res.n_quarantined == 1 and res.n_triples > 0
-    assert bad_probes.value == 2, (
-        f"bad row scanned {bad_probes.value}x (want 2: metadata + extraction input) — "
+    return bad_probes.value
+
+
+def test_dirty_path_quarantine_write_does_not_rescan(spark, tmp_path):
+    """The quarantine WRITE must reuse the metadata pass: across a
+    whole dirty run a bad row in a source with NO valid rows (never
+    dirty) is read exactly once — by the metadata scan.  The
+    extraction-input scan is filtered to the dirty sources below the
+    content read, so it never reaches that row.  A recompute-the-bad-set
+    implementation adds a full pass; the old in_lang-from-corpus triples
+    branch added another."""
+    reads = _bad_row_reads(spark, tmp_path, "bad/repo")
+    assert reads == 1, (
+        f"bad row scanned {reads}x (want 1: the metadata pass) — the extraction "
+        "input read a never-dirty source, or a quarantine or triples branch "
+        "rescanned the corpus"
+    )
+
+
+def test_bad_row_in_dirty_source_is_read_twice(spark, tmp_path):
+    """A bad row inside a DIRTY source is read exactly twice: by the
+    metadata scan and by the extraction-input scan, whose validity
+    filter must read the row to exclude it — and by nothing else."""
+    reads = _bad_row_reads(spark, tmp_path, "mega/monorepo")
+    assert reads == 2, (
+        f"bad row scanned {reads}x (want 2: metadata + extraction input) — "
         "a quarantine or triples branch rescanned the corpus"
     )
 
