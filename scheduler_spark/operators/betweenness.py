@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import edge_list
+
 
 def seeded_betweenness(
     edges: DataFrame,
@@ -52,13 +54,7 @@ def seeded_betweenness(
     betweenness = Σ_seeds δ(s, v), the Brandes dependency restricted
     to the sampled sources and bounded radius; n_seed_paths counts the
     seeds that reach the node.  Rounded to 6 dp (ratio-sum floats)."""
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    if not directed:
-        e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    e = e.distinct().localCheckpoint()
+    e = edge_list(edges, src, dst, symmetric=not directed)
 
     l0 = (
         seeds.select(F.col(seed_col).alias("s"))

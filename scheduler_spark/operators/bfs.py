@@ -14,11 +14,9 @@ seed set, as a pure DataFrame frontier loop:
   new (src, dst) pairs, anti-join against `visited` so a node is kept
   only at FIRST reach — first reach IS the shortest distance, so no
   min-aggregation pass is needed.
-- `localCheckpoint` per round truncates lineage (same reasoning as
-  operators/components.py: an O(hops)-deep iterative plan otherwise
-  doubles per round).
-- rounds are bounded by `max_hops`, with early exit on an empty
-  frontier (one lightweight count per round).
+- exactly `max_hops` rounds run on `rounds.iterate`, with no per-round
+  check: a round after the frontier empties joins nothing, so it is
+  cheaper than the driver round trip an early exit would cost.
 
 Scale notes: state is O(seeds × reachable-within-k), sharded by the
 (src, dst) shuffle — never collected.  The per-round join shuffles only
@@ -32,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import edge_list, iterate
 
 
 def bfs_shortest_paths(
@@ -47,33 +47,28 @@ def bfs_shortest_paths(
     dist = BFS shortest-path length in [1, max_hops]; the trivial
     (s, s, 0) rows are excluded.  Undirected inputs are symmetrized.
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    if not directed:
-        e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    e = e.distinct().localCheckpoint()
-
+    e = edge_list(edges, src, dst, symmetric=not directed)
     s = seeds.select(F.col(seed_col).alias("src_node")).distinct()
     # seed self-rows at dist 0: they seed the frontier AND block cycles
     # back to the source from re-entering visited; filtered at the end.
-    visited = s.select(
+    start = s.select(
         "src_node", F.col("src_node").alias("dst_node"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint()
-    frontier = visited
+    )
 
-    for _ in range(max_hops):
+    def expand(state: tuple) -> tuple:
+        visited, frontier = state
+        visited = visited.union(frontier)
         nxt = (
             frontier.join(e, frontier["dst_node"] == e["u"])
             .select("src_node", F.col("v").alias("dst_node"), (F.col("dist") + 1).alias("dist"))
             .dropDuplicates(["src_node", "dst_node"])
             .join(visited, ["src_node", "dst_node"], "left_anti")
-            .localCheckpoint()
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt).localCheckpoint()
-        frontier = nxt
+        return visited, nxt
 
-    return visited.filter(F.col("dist") >= 1).select("src_node", "dst_node", "dist")
+    visited, frontier = iterate(expand, (start.limit(0), start), max_hops)
+    return (
+        visited.union(frontier)
+        .filter(F.col("dist") >= 1)
+        .select("src_node", "dst_node", "dist")
+    )

@@ -34,8 +34,8 @@ Distributed shape — why this survives 100 TB:
 - pair counting is OVERLAPPING (for ' a a a ' the pair 'a a' counts
   twice), matching the reference implementation's get_stats; only the
   merge application is non-overlapping.
-- ``localCheckpoint`` per round truncates lineage (the CC/BFS loop
-  discipline, operators/components.py:19-28).
+- ``localCheckpoint`` per round truncates lineage (the graph loops'
+  cadence, operators/rounds.py).
 """
 
 from __future__ import annotations
@@ -157,36 +157,6 @@ def _bpe_train_vocab(
     return spark.createDataFrame(merges, schema), vocab
 
 
-def bpe_segment_words(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply an ordered merge list to the corpus's word types →
-    DataFrame(w, n_sub): each distinct word (length ≥ 2) with its
-    subword count under the trained merges.
-
-    The encode pass mirrors training: k chained `replace` projections
-    over the word-TYPE table (vocabulary-bounded, one corpus pass to
-    build it), merges applied in rank order — the greedy-apply order
-    every public BPE encoder uses.  At 100 TB this is the tokenizer
-    APPLICATION plan: the corpus is scanned once to group word types,
-    the k replaces run over the vocabulary only, and callers join the
-    segmentation back on the word column.
-    """
-    vocab = _word_types(df, text_col)
-    s = F.col("s")
-    for left, right in merges:
-        s = F.replace(s, F.lit(f" {left}  {right} "), F.lit(f" {left}{right} "))
-    return (
-        vocab.select(s.alias("s"), "freq")
-        .select(
-            F.replace(F.col("s"), F.lit(" "), F.lit("")).alias("w"),
-            F.size(F.split(F.trim("s"), "  ")).cast("long").alias("n_sub"),
-        )
-    )
-
-
 def bpe_encode_counts(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -204,8 +174,7 @@ def bpe_encode_counts(
     # checkpointed and reused for (a) the word-type table training runs
     # on and (b) the per-doc rollup join; the trained loop's final
     # vocabulary IS the segmentation table (all k merges applied), so
-    # the old path's second corpus tokenize (bpe_segment_words) and its
-    # k replayed replaces are gone.  Same symbols, same merges, same
+    # no second corpus tokenize or replay of the k replaces is needed.  Same symbols, same merges, same
     # counts — grouping word TYPES by `w` instead of by the delimited
     # symbol string is a bijection (s ↔ w).
     d = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))

@@ -12,8 +12,8 @@ Scale notes:
   a distinct and an anti-join against the accumulated closure — all
   AQE-partitionable key shuffles; no driver state beyond the per-round
   new-pair count.
-- ``localCheckpoint`` per round truncates lineage (the CC/BFS loop
-  discipline, operators/components.py:19-28).
+- the rounds run on `rounds.iterate`; each carries (closure, frontier)
+  and folds the previous frontier into the closure first.
 - rounds are bounded by the longest path (≈ hierarchy depth, single
   digits for real taxonomies), not by pair volume.
 """
@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import edge_list, iterate
 
 MAX_ROUNDS = 50
 
@@ -55,16 +57,11 @@ def transitive_closure(
     prev = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
     spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     try:
-        base = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        closure = base
-        frontier = base
-        done = False
-        for _ in range(max_rounds):
+        base = edge_list(edges, src, dst)
+
+        def extend(state: tuple) -> tuple:
+            closure, frontier = state
+            closure = closure.unionByName(frontier)
             new = (
                 frontier.alias("f")
                 .join(base.alias("b"), F.col("f.v") == F.col("b.u"))
@@ -72,105 +69,18 @@ def transitive_closure(
                 .filter(F.col("u") != F.col("v"))
                 .distinct()
                 .join(closure, ["u", "v"], "left_anti")
-                .localCheckpoint()
             )
-            if new.count() == 0:
-                done = True
-                break
-            closure = closure.unionByName(new).localCheckpoint()
-            frontier = new
-        if not done:
-            raise RuntimeError(
-                f"transitive_closure did not reach a fixpoint within "
-                f"{max_rounds} rounds (longest path exceeds the bound); "
-                f"raise max_rounds"
-            )
+            return closure, new
+
+        closure, _ = iterate(
+            extend,
+            (base.limit(0), base),
+            max_rounds,
+            until=lambda state: state[1].isEmpty(),
+            name="transitive_closure",
+        )
     finally:
         spark.conf.set("spark.sql.constraintPropagation.enabled", prev)
     return closure.select(
         F.col("u").alias(src), F.col("v").alias(dst)
     )
-
-
-def incremental_closure(
-    closure: DataFrame,
-    edges: DataFrame,
-    new_edges: DataFrame,
-    src: str = "src_entity",
-    dst: str = "dst_entity",
-    max_rounds: int = MAX_ROUNDS,
-) -> DataFrame:
-    """TC(E) + a batch of new edges Δ → TC(E ∪ Δ) without recomputing
-    from scratch — the closure analog of the engine's bytesum-skip
-    incremental pulls (plans/checkpoint.py): only paths that USE a Δ
-    edge can be new, and every such path decomposes as
-    (old-closure prefix | empty) · first-Δ-edge · (arbitrary suffix),
-    so the semi-naive loop runs with the accumulator SEEDED at the old
-    closure and the frontier seeded at (C ∪ I) ∘ Δ — work tracks the
-    delta's reach, not the graph.  A Δ touching nothing reachable costs
-    one join round.
-
-    Same contracts as transitive_closure: self-loops dropped, cycles
-    safe, RuntimeError on max_rounds exhaustion, and the Spark 4.1
-    constraint-propagation guard for the checkpointed-union loop shape.
-    """
-    spark = edges.sparkSession
-    prev = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        c0 = (
-            closure.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        delta = (
-            new_edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        base = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .unionByName(delta)
-            .distinct()
-            .localCheckpoint()
-        )
-        seed = (
-            c0.alias("c")
-            .join(delta.alias("d"), F.col("c.v") == F.col("d.u"))
-            .select(F.col("c.u").alias("u"), F.col("d.v").alias("v"))
-            .unionByName(delta)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .join(c0, ["u", "v"], "left_anti")
-            .localCheckpoint()
-        )
-        acc = c0.unionByName(seed).localCheckpoint()
-        frontier = seed
-        done = frontier.count() == 0
-        for _ in range(max_rounds):
-            if done:
-                break
-            new = (
-                frontier.alias("f")
-                .join(base.alias("b"), F.col("f.v") == F.col("b.u"))
-                .select(F.col("f.u").alias("u"), F.col("b.v").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                .join(acc, ["u", "v"], "left_anti")
-                .localCheckpoint()
-            )
-            if new.count() == 0:
-                done = True
-                break
-            acc = acc.unionByName(new).localCheckpoint()
-            frontier = new
-        if not done:
-            raise RuntimeError(
-                f"incremental_closure did not reach a fixpoint within "
-                f"{max_rounds} rounds; raise max_rounds"
-            )
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", prev)
-    return acc.select(F.col("u").alias(src), F.col("v").alias(dst))

@@ -20,8 +20,7 @@ Scale notes:
 - converges in O(log n) rounds vs O(diameter) for naive label
   propagation — the difference between 5 and 500 shuffles on a long
   chain at 10^12 scale.
-- `localCheckpoint` once per round truncates lineage: without it the
-  plan doubles per iteration and the driver OOMs planning round ~15.
+- the rounds run on `rounds.iterate` (checkpoint cadence, budget rule).
 - convergence is detected with a single aggregate fingerprint
   (count + commutative hash-sum of the edge set) — one job per round
   instead of two `exceptAll` anti-joins; a hash-sum collision marking a
@@ -34,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import ENTITIES, enforce, local_frame
+from .rounds import edge_list, iterate, unchanged
 
 MAX_ITERATIONS = 25
 
@@ -135,15 +135,14 @@ def connected_components(
     entity exists — it must not vanish from canonicalization).  Nodes
     absent from `edges` entirely are the caller's concern (left-join
     and coalesce to self).  Raises RuntimeError if the distributed loop
-    does not converge within `max_iterations` rounds (the closure.py
-    contract: a silently truncated labeling is worse than none).
+    does not converge within `max_iterations` rounds.
 
     Spark actions: the raw edges are checkpointed lazily, then either one
     bounded collect (at most `small_graph_threshold` + 1 edge rows, none
     over the per-edge byte cap) whose union-find labels come back as a
     LocalRelation, or — past either bound, or with
-    `small_graph_threshold=0` — the distributed loop: one checkpoint
-    and one fingerprint job per round.
+    `small_graph_threshold=0` — the distributed loop: one fingerprint
+    action per round, which also materializes the round's checkpoint.
     """
     def fingerprint(df: DataFrame) -> tuple:
         row = df.agg(
@@ -185,7 +184,7 @@ def connected_components(
         if len(rows) <= small_graph_threshold and all(r["u"] is not None for r in rows):
             return _driver_union_find(spark, rows)
 
-    e = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+    e = edge_list(raw, "u", "v")
     # Nodes whose ONLY edges are self-loops: singleton components.  The
     # anti-join is over two node-distinct sets (vocabulary-bounded, far
     # smaller than the edge list), so it rides on the output job.
@@ -199,23 +198,18 @@ def connected_components(
     def with_singletons(out: DataFrame) -> DataFrame:
         return enforce(out.unionByName(singletons), ENTITIES)
 
-    prev = fingerprint(e)
-    if prev[0] == 0:
+    start = fingerprint(e)
+    if start[0] == 0:
         return with_singletons(local_frame(spark, [], ENTITIES))
-    for _ in range(max_iterations):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        cur = fingerprint(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        # an unchanged fingerprint after the final round is convergence
-        # (the break above); anything else means e may not be a star yet
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            "rounds; raise max_iterations — labels read off a graph that is "
-            "not yet a star are wrong"
-        )
+    # an unchanged fingerprint after a round is convergence; labels read
+    # off a graph that is not yet a star are wrong, so the budget raises
+    e = iterate(
+        lambda e: _small_star(_large_star(e)),
+        e,
+        max_iterations,
+        until=unchanged(fingerprint, start),
+        name="connected_components",
+    )
     # after convergence e is a star: (member, root); add the roots.
     labels = e.select(F.col("u").alias("entity_id"), F.col("v").alias("canonical_id"))
     roots = e.select(F.col("v").alias("entity_id")).distinct().withColumn(

@@ -16,20 +16,21 @@ Kahn-style reverse-topological rounds:
   equi-join, a per-node rollup (matched count + running max), and an
   out-degree equality filter;
 - repeat until every node is final.  A cycle can never finalize, so
-  exhausting `max_rounds` raises RuntimeError (the closure.py
-  contract: a silently truncated result is worse than none).
+  exhausting `max_rounds` raises RuntimeError (a silently truncated
+  result is worse than none).
 
 Scale shape: each round is one key shuffle over the edge table plus a
 map-side-combined rollup; rounds are bounded by the DAG's longest path
-(single digits for real taxonomies), not node count.  `localCheckpoint`
-per round truncates lineage; the only driver state is the finalized
-count.
+(single digits for real taxonomies), not node count.  The rounds run
+on `rounds.iterate`; the only driver state is the finalized count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import edge_list, iterate
 
 DEFAULT_MAX_ROUNDS = 50
 
@@ -46,27 +47,17 @@ def longest_path_depth(
     not reached within `max_rounds` — in particular on any cyclic
     input, where no topological order exists.
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("od")).localCheckpoint()
+    e = edge_list(edges, src, dst)
+    outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("od")).localCheckpoint(eager=False)
     nodes = (
         e.select("u").unionByName(e.select(F.col("v").alias("u"))).distinct()
     )
     # sinks: endpoints that never appear as a source
-    fin = (
-        nodes.join(e.select("u").distinct(), "u", "left_anti")
-        .select(F.col("u").alias("n"), F.lit(0).cast("long").alias("depth"))
-        .localCheckpoint()
+    sinks = nodes.join(e.select("u").distinct(), "u", "left_anti").select(
+        F.col("u").alias("n"), F.lit(0).cast("long").alias("depth")
     )
-    total = nodes.count()
-    n_fin = fin.count()
-    for _ in range(max_rounds):
-        if n_fin == total:
-            return fin.select(F.col("n").alias("node"), "depth")
+
+    def finalize(fin: DataFrame) -> DataFrame:
         matched = (
             e.join(fin, e["v"] == fin["n"])
             .groupBy("u")
@@ -81,16 +72,14 @@ def longest_path_depth(
             .select(F.col("u").alias("n"), (F.col("md") + 1).cast("long").alias("depth"))
             .join(fin.select("n"), "n", "left_anti")
         )
-        fin = fin.unionByName(ready).localCheckpoint()
-        n_fin = fin.count()
-    # re-check AFTER the final iteration (ADVICE r05: the top-of-loop
-    # check alone made the effective capacity max_rounds-1 — a DAG
-    # whose finalization needs exactly max_rounds rounds finished the
-    # work but raised), mirroring ktruss's check-after-peel
-    if n_fin == total:
-        return fin.select(F.col("n").alias("node"), "depth")
-    raise RuntimeError(
-        f"longest_path_depth did not finalize all {total} nodes within "
-        f"{max_rounds} rounds ({n_fin} done) — cyclic input or longest "
-        "path exceeds the bound; raise max_rounds"
+        return fin.unionByName(ready)
+
+    total = nodes.count()
+    fin = iterate(
+        finalize,
+        sinks,
+        max_rounds,
+        until=lambda fin: fin.count() == total,
+        name="longest_path_depth",
     )
+    return fin.select(F.col("n").alias("node"), "depth")

@@ -9,13 +9,13 @@ good things" from "things pointed at" — the natural KG companion score
 for the harvested link graph (same edge shape the PageRank gate uses).
 
 Scale notes:
-- identical loop discipline to pagerank/components: every step is an
-  equi-join (edges ⨝ score vector on the node id) plus a
-  map-side-combinable sum; ``localCheckpoint`` per half-iteration
-  truncates lineage.
+- every half-iteration is an equi-join (edges ⨝ score vector on the
+  node id) plus a map-side-combinable sum; the rounds run on
+  `rounds.iterate`.
 - normalization is ONE scalar aggregate per half-iteration (the L1
-  mass), not a per-node broadcast; L1 is used instead of the paper's
-  L2 so the SQL oracle twin is a plain SUM.
+  mass), cross-joined back as a 1-row side, not a driver round trip or
+  a per-node broadcast; L1 is used instead of the paper's L2 so the
+  SQL oracle twin is a plain SUM.
 - bucketing both sides on the node id makes the per-iteration joins
   shuffle-free at cluster scale (tests/test_plans.py proves the layout).
 """
@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import edge_list, iterate
 
 DEFAULT_ITERATIONS = 2
 
@@ -55,43 +57,39 @@ def hits(
         raw.select(F.col("u").alias("n"))
         .union(raw.select(F.col("v").alias("n")))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    e = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+    e = edge_list(edges, src, dst)
 
-    def _normalize(scores: DataFrame, col: str) -> DataFrame:
-        mass = scores.agg(F.sum(col)).first()[0] or 0.0
-        if mass <= 0.0:
-            return scores.localCheckpoint()
-        return scores.select(
-            "n", (F.col(col) / F.lit(mass)).alias(col)
-        ).localCheckpoint()
+    def spread(scores: DataFrame, frm: str, to: str, col: str) -> DataFrame:
+        """Σ of `scores` over the edges frm → to, for every node, divided
+        by its L1 mass (kept unnormalized when the mass is <= 0)."""
+        got = (
+            e.join(scores, e[frm] == scores["n"])
+            .groupBy(F.col(to).alias("m"))
+            .agg(F.sum(scores.columns[1]).alias("s"))
+        )
+        raw = nodes.join(got, nodes["n"] == got["m"], "left").select(
+            "n", F.coalesce(F.col("s"), F.lit(0.0)).alias(col)
+        )
+        return raw.crossJoin(raw.agg(F.sum(col).alias("mass"))).select(
+            "n",
+            F.when(F.col("mass") > 0.0, F.col(col) / F.col("mass"))
+            .otherwise(F.col(col))
+            .alias(col),
+        )
 
     hubs = nodes.select("n", F.lit(1.0).alias("hub"))
     auths = nodes.select("n", F.lit(0.0).alias("auth"))
-    for _ in range(iterations):
-        auth_mass = (
-            e.join(hubs, e["u"] == hubs["n"])
-            .groupBy(F.col("v").alias("m"))
-            .agg(F.sum("hub").alias("s"))
+    if iterations > 0:
+        # a round's hubs depend only on its auths, so the loop carries
+        # the auth vector alone and derives the last hubs after it
+        auths = iterate(
+            lambda a: spread(spread(a, "v", "u", "hub"), "u", "v", "auth"),
+            spread(hubs, "u", "v", "auth"),
+            iterations - 1,
         )
-        auths = _normalize(
-            nodes.join(auth_mass, nodes["n"] == auth_mass["m"], "left").select(
-                "n", F.coalesce(F.col("s"), F.lit(0.0)).alias("auth")
-            ),
-            "auth",
-        )
-        hub_mass = (
-            e.join(auths, e["v"] == auths["n"])
-            .groupBy(F.col("u").alias("m"))
-            .agg(F.sum("auth").alias("s"))
-        )
-        hubs = _normalize(
-            nodes.join(hub_mass, nodes["n"] == hub_mass["m"], "left").select(
-                "n", F.coalesce(F.col("s"), F.lit(0.0)).alias("hub")
-            ),
-            "hub",
-        )
+        hubs = spread(auths, "v", "u", "hub")
     return (
         nodes.join(hubs, "n")
         .join(auths, "n")

@@ -13,19 +13,12 @@ Scale notes:
   peel round is ONE map-side-combinable degree aggregation plus two
   left-semi joins against the surviving node set — all equi-joins on
   the node id, AQE-partitionable, no driver-side adjacency.
-- ``localCheckpoint`` per BATCH truncates lineage (the CC/BFS/PageRank
-  loop discipline, operators/components.py:19-28).
-- the fixpoint probe is batched: ``batch`` peel rounds are composed
-  lazily (Catalyst handles 2-3 chained agg+semi-join rounds in one
-  plan), then ONE checkpoint + ONE scalar count per batch.  Node counts
-  only ever shrink, so an unchanged count across a whole batch proves
-  the fixpoint was already reached — overshoot is safe to detect late.
-  This cuts driver round-trips AND checkpoint materializations by the
-  batch factor vs the round-4 one-count-per-peel loop.
+- the fixpoint check is one degree aggregate over the round's
+  checkpoint: a round after which no node has degree < k is the k-core.
 - peel depth is bounded by the graph's degeneracy ordering, typically
   < 100 even on web graphs; exhausting ``max_rounds`` before the
   fixpoint raises RuntimeError (a silently truncated core is a
-  SUPERSET of the true k-core — the closure.py:82 contract).
+  SUPERSET of the true k-core).
 - at 1000-executor scale both join sides would be bucketed on the node
   id so every round's semi-joins are shuffle-free (the same layout
   ``catalog.write_bucketed`` proves in tests/test_plans.py).
@@ -36,9 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import edge_list, iterate
+
 DEFAULT_K = 2
 MAX_ROUNDS = 100
-PROBE_BATCH = 2
 
 
 def kcore(
@@ -47,7 +41,6 @@ def kcore(
     src: str = "src_entity",
     dst: str = "dst_entity",
     max_rounds: int = MAX_ROUNDS,
-    batch: int = PROBE_BATCH,
 ) -> DataFrame:
     """Directed/undirected edge list → DataFrame(node_id, core_degree):
     the nodes of the k-core with their within-core degree.
@@ -57,60 +50,29 @@ def kcore(
     throughout, no floats.  Raises RuntimeError if ``max_rounds`` peel
     rounds run without reaching the fixpoint — the partially peeled
     graph is a superset of the true k-core and silently returning it
-    would violate the definition (same contract as closure.py:82).
+    would violate the definition.
     """
-    if batch < 1:
-        raise ValueError(f"batch must be >= 1, got {batch}")
-    fwd = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    und = (
-        fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev_nodes = -1
-    rounds_run = 0
-    done = False
-    while rounds_run < max_rounds:
-        # Compose `batch` peel rounds LAZILY (no checkpoint/count between):
-        # each round is one degree agg + two left-semi joins, and node
-        # counts only ever shrink, so probing after the batch is safe.
-        for _ in range(min(batch, max_rounds - rounds_run)):
-            # und holds BOTH directions, so grouping on u sees every node
-            # and count(*) is the distinct-neighbor degree
-            keep = (
-                und.groupBy("u")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k)
-                .select("u")
-            )
-            und = (
-                und.join(keep, "u", "left_semi")
-                .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-                .select("u", "v")
-            )
-            rounds_run += 1
-        und = und.localCheckpoint()
-        # und is symmetric, so distinct u = the surviving node set
-        n = und.select("u").distinct().count()
-        if n == prev_nodes or n == 0:
-            # the set is monotone non-increasing round-over-round, so an
-            # unchanged count across a whole batch means the batch's FIRST
-            # round already peeled nothing: fixpoint (or empty core)
-            done = True
-            break
-        prev_nodes = n
-    if not done:
-        raise RuntimeError(
-            f"kcore did not reach the fixpoint within {max_rounds} peel "
-            f"rounds ({prev_nodes} nodes still surviving); the partial "
-            f"result would be a superset of the {k}-core — raise max_rounds"
+
+    # und holds BOTH directions, so grouping on u sees every node and
+    # count(*) is the distinct-neighbor degree
+    def degrees(und: DataFrame) -> DataFrame:
+        return und.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+
+    def peel(und: DataFrame) -> DataFrame:
+        keep = degrees(und).filter(F.col("deg") >= k).select("u")
+        return (
+            und.join(keep, "u", "left_semi")
+            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
+            .select("u", "v")
         )
-    return (
-        und.groupBy("u")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-        .filter(F.col("core_degree") >= k)
-        .select(F.col("u").alias("node_id"), "core_degree")
+
+    und = iterate(
+        peel,
+        edge_list(edges, src, dst, symmetric=True),
+        max_rounds,
+        until=lambda und: degrees(und).filter(F.col("deg") < k).isEmpty(),
+        name="kcore",
+    )
+    return degrees(und).select(
+        F.col("u").alias("node_id"), F.col("deg").alias("core_degree")
     )

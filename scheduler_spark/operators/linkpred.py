@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import edge_list
+
 
 def predict_links(
     edges: DataFrame,
@@ -44,15 +46,7 @@ def predict_links(
 ) -> DataFrame:
     """Undirected-ified edge list → top-k non-adjacent pairs:
     (entity_a, entity_b, common_neighbors, jaccard_score)."""
-    raw = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    adj = (
-        raw.union(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    adj = edge_list(edges, src, dst, symmetric=True)
     deg = adj.groupBy(F.col("u").alias("n")).agg(F.count(F.lit(1)).alias("d"))
     centers = adj
     if max_wedge_degree is not None:
@@ -67,9 +61,9 @@ def predict_links(
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("cn"))
     )
-    observed = raw.select(
-        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-    ).distinct()
+    observed = adj.filter(F.col("u") < F.col("v")).select(
+        F.col("u").alias("a"), F.col("v").alias("b")
+    )
     cand = wedges.join(observed, ["a", "b"], "left_anti")
     scored = (
         cand.join(deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a")

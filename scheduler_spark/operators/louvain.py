@@ -29,14 +29,15 @@ modularity.py discipline.
 Scale shape per round: one edge ⨝ label join (shuffle on the node id),
 one (node, community) rollup with map-side combine, one community
 degree rollup, a per-node window argmax — all linear in |E|; the 2m
-total is a 1-row broadcast scalar.  `localCheckpoint` per round
-truncates lineage.
+total is a 1-row broadcast scalar.  The rounds run on `rounds.iterate`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .rounds import edge_list, iterate
 
 
 def louvain_local_moving(
@@ -50,19 +51,11 @@ def louvain_local_moving(
     Self-loops drop and edges de-duplicate after symmetrizing; the node
     universe is the endpoints of the surviving edges.
     """
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
-        F.col("u") != F.col("v")
-    )
-    e = (
-        raw.union(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = edge_list(edges, src, dst, symmetric=True)
     deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("ku"))
     m2 = e.agg(F.count(F.lit(1)).cast("long").alias("m2"))
     lab = deg.select(F.col("u").alias("n"), F.col("u").alias("c"))
-    for _ in range(rounds):
-        lab = _move_round(e, deg, m2, lab).localCheckpoint()
+    lab = iterate(lambda lab: _move_round(e, deg, m2, lab), lab, rounds)
     return lab.select(F.col("n").alias("entity_id"), F.col("c").alias("community"))
 
 

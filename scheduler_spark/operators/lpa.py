@@ -33,8 +33,7 @@ Scale shape (the 100 TB story):
   (node,label) count with map-side partial aggregation + one
   row_number window per node — all AQE-partitionable, state strictly
   node/edge-shaped, nothing driver-side;
-- ``localCheckpoint`` per round truncates lineage exactly as the
-  CC/PageRank/BFS loops do (operators/components.py:19-28);
+- the rounds run on `rounds.iterate`;
 - a production deployment buckets the static edge table on the node id
   once so every per-round join is shuffle-free on the edge side.
 """
@@ -43,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .rounds import edge_list, iterate
 
 DEFAULT_ITERATIONS = 5
 
@@ -61,36 +62,23 @@ def label_propagation(
     singleton communities union them back).  Deterministic for a fixed
     edge set — safe to hash-compare.
     """
-    raw = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    e = (
-        raw.union(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = e.select(F.col("u").alias("n")).distinct().localCheckpoint()
+    e = edge_list(edges, src, dst, symmetric=True)
+    nodes = e.select(F.col("u").alias("n")).distinct().localCheckpoint(eager=False)
     # one self-vote edge per node (see module docstring)
-    voting = e.union(
-        nodes.select(F.col("n").alias("u"), F.col("n").alias("v"))
-    ).localCheckpoint()
-    labels = nodes.select("n", F.col("n").alias("label"))
+    voting = e.union(nodes.select(F.col("n").alias("u"), F.col("n").alias("v")))
     pick = Window.partitionBy("n").orderBy(F.desc("c"), F.asc("label"))
-    for i in range(max(iterations, 0)):
+
+    def vote(labels: DataFrame) -> DataFrame:
         counts = (
             voting.join(labels.select(F.col("n").alias("v"), "label"), "v")
             .groupBy(F.col("u").alias("n"), "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        return (
             counts.withColumn("rn", F.row_number().over(pick))
             .filter(F.col("rn") == 1)
             .select("n", "label")
         )
-        # truncate lineage BETWEEN rounds only: the final round stays a
-        # plain plan, so plan audits/tests see the real join+window
-        # shape instead of a checkpoint RDD scan
-        if i < iterations - 1:
-            labels = labels.localCheckpoint()
+
+    labels = iterate(vote, nodes.select("n", F.col("n").alias("label")), iterations)
     return labels.select(F.col("n").alias("entity_id"), F.col("label").alias("community"))

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import edge_list
+
 
 def community_modularity(
     edges: DataFrame,
@@ -57,15 +59,7 @@ def community_modularity(
     (possible only if the map was built on a different edge set) are
     ignored on the edge side and never form communities.
     """
-    raw = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    e = (
-        raw.union(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = edge_list(edges, src, dst, symmetric=True)
     lab = assignments.select(
         F.col(node_col).alias("n"), F.col(community_col).alias("c")
     )

@@ -4,8 +4,7 @@ The reference ranks harvested entities only by degree (the release
 rollups count features per source); a KG consumer ordering entities for
 display/linking wants a link-structure score, so the engine adds damped
 PageRank as a first-class iterative operator next to
-``connected_components`` (same loop discipline:
-operators/components.py:19-28).
+``connected_components`` (same round loop: operators/rounds.py).
 
 Semantics (classic Page et al. 1999, uniform teleport):
 
@@ -20,8 +19,8 @@ Scale notes:
 - ranks/contribs are node- and edge-shaped DataFrames; every step is an
   equi-join + partial-aggregated groupBy — AQE-partitionable, no
   driver-side state except the two scalar aggregates (N, dangling mass).
-- ``localCheckpoint`` once per iteration truncates lineage, exactly as
-  the CC loop does — without it the plan doubles per round.
+- both variants share one iteration body (`_power_iterate`) on
+  `rounds.iterate`.
 - out-degrees are computed once before the loop and reused; at web
   scale this is the classic "join rank vector with static link matrix"
   shape, so a production deployment would bucket both sides on the
@@ -32,11 +31,59 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import edge_list, iterate
 
 DEFAULT_DAMPING = 0.85
 DEFAULT_ITERATIONS = 10
+
+
+def _power_iterate(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    nodes: DataFrame,
+    ranks: DataFrame,
+    iterations: int,
+    damping: float,
+    teleport: Column,
+    dangling_share: Callable[[float], Column],
+) -> DataFrame:
+    """The damped power iteration both variants run: every round,
+
+        rank'(v) = teleport(v) + d·( Σ_{u→v} rank(u)/outdeg(u) + share_D(v) )
+
+    over every row of `nodes` (which carries the columns `teleport`
+    reads), where D is the rank mass on dangling nodes — ONE scalar
+    aggregate per round — and `dangling_share(D)` spreads it back."""
+    e = edge_list(edges, src, dst)
+    deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("double").alias("outdeg"))
+
+    def step(ranks: DataFrame) -> DataFrame:
+        with_deg = ranks.join(deg, ranks["n"] == deg["u"], "left")
+        dangling = with_deg.filter(F.col("u").isNull()).agg(F.sum("rank")).first()[0] or 0.0
+        contribs = (
+            e.join(ranks, e["u"] == ranks["n"])
+            .join(deg, "u")
+            .select(F.col("v").alias("n"), (F.col("rank") / F.col("outdeg")).alias("c"))
+            .groupBy("n")
+            .agg(F.sum("c").alias("contrib"))
+        )
+        return nodes.join(contribs, "n", "left").select(
+            "n",
+            (
+                teleport
+                + F.lit(damping)
+                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dangling_share(dangling))
+            ).alias("rank"),
+        )
+
+    ranks = iterate(step, ranks, iterations)
+    return ranks.select(F.col("n").alias("entity_id"), "rank")
 
 
 def pagerank(
@@ -61,45 +108,19 @@ def pagerank(
         raw.select(F.col("u").alias("n"))
         .union(raw.select(F.col("v").alias("n")))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    e = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
     n_nodes = nodes.count()
     if n_nodes == 0:
         # empty-input empty output, preserving the caller's id type
         return raw.select(
             F.col("u").alias("entity_id"), F.lit(0.0).alias("rank")
         ).limit(0)
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("double").alias("outdeg"))
-
     ranks = nodes.select("n", (F.lit(1.0) / n_nodes).alias("rank"))
-    teleport = (1.0 - damping) / n_nodes
-    for _ in range(iterations):
-        with_deg = ranks.join(deg, ranks["n"] == deg["u"], "left")
-        # dangling = rank mass on nodes with no out-edges (one scalar agg)
-        dangling = (
-            with_deg.filter(F.col("u").isNull()).agg(F.sum("rank")).first()[0] or 0.0
-        )
-        contribs = (
-            e.join(ranks, e["u"] == ranks["n"])
-            .join(deg, "u")
-            .select(F.col("v").alias("n"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("n")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contribs, "n", "left")
-            .select(
-                "n",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling / n_nodes))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select(F.col("n").alias("entity_id"), "rank")
+    teleport = F.lit((1.0 - damping) / n_nodes)
+    return _power_iterate(
+        edges, src, dst, nodes, ranks, iterations, damping, teleport, lambda d: F.lit(d / n_nodes)
+    )
 
 
 def personalized_pagerank(
@@ -123,10 +144,9 @@ def personalized_pagerank(
 
         rank'(v) = (1-d)·s(v) + d·( Σ_{u→v} rank(u)/outdeg(u) + D·s(v) )
 
-    with s(v) = 1/|S| on seeds, else 0.  Same loop discipline and
-    scale shape as :func:`pagerank` — per-iteration equi-joins, one
-    scalar dangling aggregate, localCheckpoint lineage truncation; the
-    only new state is the broadcastable seed indicator column.
+    with s(v) = 1/|S| on seeds, else 0.  Same iteration body and scale
+    shape as :func:`pagerank`; the only new state is the broadcastable
+    seed indicator column.
     """
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sd = seeds.select(F.col(seed_col).alias("n")).distinct()
@@ -151,35 +171,8 @@ def personalized_pagerank(
         )
         .localCheckpoint()
     )
-    e = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("double").alias("outdeg"))
-
     ranks = base.select("n", F.col("s").alias("rank"))
-    for _ in range(iterations):
-        with_deg = ranks.join(deg, ranks["n"] == deg["u"], "left")
-        dangling = (
-            with_deg.filter(F.col("u").isNull()).agg(F.sum("rank")).first()[0] or 0.0
-        )
-        contribs = (
-            e.join(ranks, e["u"] == ranks["n"])
-            .join(deg, "u")
-            .select(F.col("v").alias("n"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("n")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            base.join(contribs, "n", "left")
-            .select(
-                "n",
-                (
-                    F.lit(1.0 - damping) * F.col("s")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.lit(dangling) * F.col("s")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select(F.col("n").alias("entity_id"), "rank")
+    teleport = F.lit(1.0 - damping) * F.col("s")
+    return _power_iterate(
+        edges, src, dst, base, ranks, iterations, damping, teleport, lambda d: F.lit(d) * F.col("s")
+    )

@@ -17,11 +17,10 @@ equi-join:
 - only IMPROVED rows re-enter the frontier, so per-round cost tracks
   the relaxation wave, not |V|×|E| (semi-naive evaluation, the
   closure.py discipline).
-- `localCheckpoint` per round truncates lineage; rounds are bounded by
-  the longest cheapest path's HOP count.  Exhausting ``max_rounds``
-  before the fixpoint raises RuntimeError (the closure.py contract —
-  a silently truncated distance table understates nothing visibly and
-  is worse than no answer).
+- rounds run on `rounds.iterate` and are bounded by the longest
+  cheapest path's HOP count.  Exhausting ``max_rounds`` before the
+  fixpoint raises RuntimeError (a silently truncated distance table
+  understates nothing visibly and is worse than no answer).
 - integer weights keep every comparison exact; negative weights are
   rejected (Bellman-Ford tolerates them, but a negative cycle would
   relax forever and no KG cost model emits them).
@@ -36,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import iterate
 
 MAX_ROUNDS = 50
 
@@ -66,35 +67,37 @@ def weighted_sssp(
     if e.filter(F.col("ew") < 0).limit(1).count() > 0:
         raise ValueError("weighted_sssp requires non-negative weights")
 
-    dist = (
+    start = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
     )
-    frontier = dist
-    for _ in range(max_rounds):
+
+    # `found` keeps every (node, dist) row ever improved; a node's
+    # distance is its least row, so a round reads the rows it found
+    # last without re-deriving the whole table first
+    def relax(state: tuple) -> tuple:
+        found, improved = state
+        found = found.union(improved)
+        best = found.groupBy("node").agg(F.min("dist").alias("dist"))
         cand = (
-            frontier.join(e, frontier["node"] == e["eu"])
+            improved.join(e, improved["node"] == e["eu"])
             .select(F.col("ev").alias("node"), (F.col("dist") + F.col("ew")).alias("nd"))
             .groupBy("node")
             .agg(F.min("nd").alias("nd"))
         )
-        joined = cand.join(dist, "node", "left")
         improved = (
-            joined.filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
+            cand.join(best, "node", "left")
+            .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
             .select("node", F.col("nd").alias("dist"))
-            .localCheckpoint()
         )
-        if improved.isEmpty():
-            return dist
-        dist = (
-            dist.join(improved.select("node"), "node", "left_anti")
-            .union(improved)
-            .localCheckpoint()
-        )
-        frontier = improved
-    raise RuntimeError(
-        f"weighted_sssp did not converge within {max_rounds} rounds — "
-        "raise max_rounds (cheapest paths longer than the bound exist)"
+        return found, improved
+
+    found, _ = iterate(
+        relax,
+        (start.limit(0), start),
+        max_rounds,
+        until=lambda state: state[1].isEmpty(),
+        name="weighted_sssp",
     )
+    return found.groupBy("node").agg(F.min("dist").alias("dist"))

@@ -10,22 +10,22 @@ triangle-free spokes (the reference's 3-hop neighborhood probe,
 /root/reference/userCode/defs_test.py:104-116, has no way to tell the
 two apart).
 
-Iterative peel, same contract as kcore/closure:
+Iterative peel on `rounds.iterate`, same contract as kcore/closure:
 
 - round r enumerates the surviving subgraph's triangles ONCE via the
   degree-ordered wedge join (operators/triangles.py — oriented
   out-degree bounded O(√m), hubs never generate quadratic wedge keys),
   credits each triangle to its three edges, and drops edges with
   support < k−2;
-- repeat until no edge is dropped (fixpoint) or `max_rounds` is
+- repeat until a round drops no edge (fixpoint) or `max_rounds` is
   exhausted, in which case the operator RAISES rather than silently
-  returning a superset (the closure.py convention: a silently
-  truncated peel is worse than no peel).
+  returning a superset (a silently truncated peel is worse than no
+  peel).
 
 Scale shape: per-round cost is the wedge volume O(m^{3/2}) worst-case
 with map-side-combined per-edge rollups; the edge set shrinks
-monotonically, `localCheckpoint` per round truncates lineage, and the
-fixpoint probe is one count on already-materialized data.  Bucketing
+monotonically, and the fixpoint probe is one count per round, which
+also materializes the round's checkpoint.  Bucketing
 the edge table on the node id makes the wedge joins shuffle-free at
 cluster scale.
 """
@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import iterate, unchanged
 from .triangles import _oriented_by_degree
 
 DEFAULT_MAX_ROUNDS = 50
@@ -84,24 +85,15 @@ def ktruss(
         edges.filter(F.col(src) != F.col(dst))
         .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    n_prev = cur.count()
-    min_support = k - 2
-    for _ in range(max_rounds):
-        kept = (
-            _edge_support(cur)
-            .filter(F.col("support") >= min_support)
-            .localCheckpoint()
-        )
-        n_now = kept.count()
-        cur = kept.select("a", "b")
-        if n_now == n_prev or n_now == 0:
-            return kept.select(
-                F.col("a").alias("node_u"), F.col("b").alias("node_v"), "support"
-            )
-        n_prev = n_now
-    raise RuntimeError(
-        f"ktruss(k={k}) did not converge within {max_rounds} rounds; "
-        "raise max_rounds — a silently truncated peel is worse than none"
+    kept = iterate(
+        lambda kept: _edge_support(kept.select("a", "b")).filter(
+            F.col("support") >= k - 2
+        ),
+        cur,
+        max_rounds,
+        until=unchanged(lambda kept: kept.count(), cur.count()),
+        name="ktruss",
     )
+    return kept.select(F.col("a").alias("node_u"), F.col("b").alias("node_v"), "support")

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rounds import edge_list
+
 DEFAULT_LENGTH = 3
 
 
@@ -42,11 +44,7 @@ def deterministic_walks(
     step, node): one row per visited node per walk, step 0..length,
     one walk per node that has at least one out-edge.  Self-loops and
     duplicate edges collapse first."""
-    fwd = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    fwd = edge_list(edges, src, dst)
     w = Window.partitionBy("u").orderBy("v")
     ranked = fwd.select(
         "u",
@@ -111,12 +109,7 @@ def node2vec_walks(
     for the distance-1 test, and two per-walk window sums over ≤ deg
     candidate rows — no driver state, `localCheckpoint` per step.
     """
-    fwd = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    fwd = edge_list(edges, src, dst)
     w = Window.partitionBy("u").orderBy("v")
     ranked = fwd.select(
         "u",

@@ -5356,7 +5356,7 @@ def kg_ktruss_5truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-level cohesion filter after the k-core's node-level one.  The
     engine peels to fixpoint with one degree-ordered triangle
     enumeration per round (RuntimeError on max_rounds exhaustion, the
-    closure.py contract); the oracle unrolls 9 id-ordered peel rounds
+    operators/rounds.py budget rule); the oracle unrolls 9 id-ordered peel rounds
     (true depth 7, 941 → 38 edges).  Integer-only, no ulp guard."""
     from .operators.truss import ktruss
 
@@ -5770,7 +5770,7 @@ def ccnet_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (SELECT i.i AS i, sum(CAST(v[i.i + 1] AS DOUBLE)) AS sx
           FROM e, range(0, 64) i(i) GROUP BY i.i)
     SELECT CAST(p.i AS BIGINT) AS dim_i, CAST(p.j AS BIGINT) AS dim_j,
-           round(p.sxy / p.n - (mi.sx / p.n) * (mj.sx / p.n), 6) AS cov
+           round(p.sxy / p.n - (mi.sx / p.n) * (mj.sx / p.n), 6) + 0.0 AS cov
     FROM p JOIN m mi ON p.i = mi.i JOIN m mj ON p.j = mj.i
     """,
 )
@@ -5781,12 +5781,13 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/pca.pca_project).  The d²/2-per-row fan-out map-side
     combines before the exchange, so the shuffle is d² × tasks
     regardless of corpus size — the wordcount shape.  Rounded to 6 dp
-    both sides (partial-agg summation order)."""
+    both sides (partial-agg summation order); `+ 0.0` on both sides
+    turns a -0.0 that rounding leaves into 0.0, so the rows hash alike."""
     from .operators.pca import covariance_matrix
 
     em = _spread(spark, sf_dir, "embeddings")
     return covariance_matrix(em).select(
-        "dim_i", "dim_j", F.round("cov", 6).alias("cov")
+        "dim_i", "dim_j", (F.round("cov", 6) + F.lit(0.0)).alias("cov")
     )
 
 

@@ -35,7 +35,7 @@ def test_longest_path_multiple_sinks_and_dups(spark):
 def test_longest_path_cycle_raises(spark):
     # a cycle has no topological order: nodes 1..3 can never finalize
     e = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
-    with pytest.raises(RuntimeError, match="finalize"):
+    with pytest.raises(RuntimeError, match="did not converge within"):
         longest_path_depth(e, max_rounds=10)
 
 

@@ -107,8 +107,8 @@ def test_sssp_negative_weight_raises(spark):
 
 
 def test_sssp_raises_when_rounds_exhausted(spark):
-    # a 5-hop chain cannot converge in 2 rounds; silent truncation is
-    # the closure.py anti-contract
+    # a 5-hop chain cannot converge in 2 rounds; silent truncation
+    # breaks the rounds.py budget rule
     e = _wedges(spark, [(i, i + 1, 1) for i in range(1, 6)])
     with pytest.raises(RuntimeError):
         weighted_sssp(e, _seeds(spark, [1]), max_rounds=2)

@@ -40,23 +40,14 @@ def test_kcore_ignores_selfloops_and_duplicates(spark):
 def test_kcore_raises_when_rounds_exhausted(spark):
     # a 9-node path peels two endpoints per round (4 rounds to empty);
     # capping max_rounds below that must raise, never return the
-    # partially peeled superset (the closure.py contract)
+    # partially peeled superset (the rounds.py budget rule)
     import pytest
 
     e = _edges(spark, [(i, i + 1) for i in range(1, 9)])
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        kcore(e, k=2, max_rounds=2, batch=1)
+    with pytest.raises(RuntimeError, match="did not converge within"):
+        kcore(e, k=2, max_rounds=2)
     # with enough rounds the same graph converges to the empty 2-core
-    assert kcore(e, k=2, max_rounds=12, batch=1).count() == 0
-
-
-def test_kcore_batched_probe_matches_per_round(spark):
-    # batch=3 composes peel rounds lazily between probes; result must be
-    # identical to the one-count-per-round loop on a peel-depth-2 graph
-    e = _edges(spark, [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)])
-    b1 = {r["node_id"]: r["core_degree"] for r in kcore(e, k=2, batch=1).collect()}
-    b3 = {r["node_id"]: r["core_degree"] for r in kcore(e, k=2, batch=3).collect()}
-    assert b1 == b3 == {1: 2, 2: 2, 3: 2}
+    assert kcore(e, k=2, max_rounds=12).count() == 0
 
 
 def test_kcore_k3_on_k4_minus_edge(spark):

@@ -7,12 +7,19 @@ against numpy directly."""
 
 from __future__ import annotations
 
+import math
+import sys
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from scheduler_spark.operators.louvain import louvain_local_moving
 from scheduler_spark.operators.pca import covariance_matrix, pca_project
+from scheduler_spark.queries import all_oracles, embedding_covariance
+
+SF = "/root/testdata/sf0.01"
 
 
 def _edges(spark, pairs):
@@ -95,3 +102,17 @@ def test_pca_explained_variance_orders_axes(spark):
     _, ratios = pca_project(_emb(spark, data), k=3)
     assert ratios[0] > 0.9
     assert ratios[0] >= ratios[1] >= ratios[2]
+
+
+def test_embedding_covariance_has_no_negative_zero(spark):
+    """A covariance that rounds to zero from below must read 0.0 on both
+    engines, or the driver's row hash tells them apart (at sf0.01 the
+    DuckDB twin rounds one entry to -0.0)."""
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from oracle_check import _duck
+
+    duck = _duck(SF).execute(all_oracles()["embedding_covariance"]).fetchall()
+    ours = [tuple(r) for r in embedding_covariance(spark, SF).collect()]
+    assert len(duck) == len(ours) == 2080
+    for rows in (duck, ours):
+        assert not [r for r in rows if r[2] == 0 and math.copysign(1.0, r[2]) < 0]

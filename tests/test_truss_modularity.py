@@ -52,10 +52,10 @@ def test_ktruss_k5_is_its_own_5truss(spark):
 def test_ktruss_raises_when_rounds_exhausted(spark):
     # triangle strip 1..12: round 1 peels every (i,i+2) chord, round 2
     # empties the remaining path — max_rounds=1 must raise, never
-    # return the half-peeled superset (the closure.py contract)
+    # return the half-peeled superset (the rounds.py budget rule)
     strip = [(i, i + 1) for i in range(1, 12)] + [(i, i + 2) for i in range(1, 11)]
     e = _edges(spark, strip)
-    with pytest.raises(RuntimeError, match="converge"):
+    with pytest.raises(RuntimeError, match="did not converge within"):
         ktruss(e, k=4, max_rounds=1)
     assert ktruss(e, k=4, max_rounds=5).count() == 0
 

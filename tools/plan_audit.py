@@ -1,8 +1,9 @@
 """Plan audit: dump the judge-relevant physical-plan facts for every
 headline query into PLANS.md.
 
-For each bench.HEADLINE query (plus the KG pipeline stages) this
-records, from the EXECUTED plan at sf0.01:
+For each bench.HEADLINE query (the headline queries only: the KG
+pipeline stages are not audited here) this records, from the EXECUTED
+plan at sf0.01:
 - join strategies used (broadcast vs sort-merge vs BNLJ),
 - exchange (shuffle) count,
 - pushed filters + read schema of the first parquet scan,
@@ -157,10 +158,12 @@ def main() -> None:
         "- `quality_gopher_rules` must show ZERO shuffles: the whole Gopher",
         "  quality pass is array-lambda expressions in one scan (plan-pinned",
         "  by tests/test_plans.py::test_quality_pass_is_shuffle_free).",
-        "- `pagerank_entity_rank` audits only the plan above the last",
-        "  iteration's localCheckpoint (per-round lineage truncation, same",
-        "  loop discipline as connected components); the per-iteration shape",
-        "  is rank⨝edges equi-join + one hash aggregate.",
+        "- the iterative graph queries (`pagerank_entity_rank`,",
+        "  `graph_bfs_distances`, `lpa_communities`, `dedup_cluster_keepers`)",
+        "  audit the plan above the previous round's localCheckpoint: a",
+        "  fixed-round loop's last round is the query's own plan",
+        "  (operators/rounds.py), a fixpoint loop's output reads its last",
+        "  checkpoint.",
         "",
     ]
     total_fb = sum(f["codegen_fallbacks"] for _, f in rows)
