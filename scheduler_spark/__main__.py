@@ -22,6 +22,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from dataclasses import asdict
 
 from pyspark.sql import SparkSession
 
@@ -74,8 +75,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         spark = _build_session(args.local_cores)
 
     if args.job == "corpus":
-        from dataclasses import asdict
-
         from .operators.corpus import prepare_training_corpus
 
         docs = spark.read.parquet(args.input).select("doc_id", "source", "text")
@@ -99,20 +98,13 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
     code = 0
     try:
-        res = run_pipeline(
-            spark, files, aliases, Catalog(args.catalog, spark),
-            run_id=args.run_id, salt=args.salt, strict=args.strict,
-            max_runtime_seconds=args.max_runtime_seconds,
+        out = asdict(
+            run_pipeline(
+                spark, files, aliases, Catalog(args.catalog, spark),
+                run_id=args.run_id, salt=args.salt, strict=args.strict,
+                max_runtime_seconds=args.max_runtime_seconds,
+            )
         )
-        out = {
-            "run_id": res.run_id,
-            "n_partitions_processed": res.n_partitions_processed,
-            "n_triples": res.n_triples,
-            "snapshot_id": res.snapshot_id,
-            "skipped": res.skipped,
-            "n_quarantined": res.n_quarantined,
-            "n_pruned_partitions": res.n_pruned_partitions,
-        }
     except StrictModeError as e:
         out = {"run_id": args.run_id, "error": str(e), "strict": True}
         code = EXIT_STRICT_QUARANTINE

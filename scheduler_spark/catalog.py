@@ -2,10 +2,13 @@
 
 Locally this is parquet + dynamic partition overwrite + a JSONL
 snapshot log per table.  The interface is deliberately the subset of
-Iceberg we rely on in production — `overwritePartitions`, snapshot ids,
-snapshot summary properties — so swapping the implementation for
-`df.writeTo("cat.db.t").overwritePartitions()` is a one-file change
-(no Iceberg runtime jar ships in this sandbox).
+Iceberg the KG sync relies on: `overwrite_partitions`
+(`df.writeTo("cat.db.t").overwritePartitions()`), `overwrite`,
+`append`, `delete_partitions` (`DELETE FROM t WHERE part IN (…)`),
+`read`, `exists`, and snapshot ids with summary properties
+(`current_snapshot_id`, `snapshots`).  Swapping the implementation
+for Iceberg rewrites these methods and nothing outside this file
+(the package does not depend on an Iceberg runtime jar).
 
 Semantics mirrored from the reference:
 - per-source artifact replace, never append-duplicate
@@ -19,12 +22,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -68,95 +72,8 @@ class Catalog:
         return self._commit(name, "overwrite", properties or {})
 
     def append(self, df: DataFrame, name: str, properties: dict[str, Any] | None = None) -> int:
-        """Append rows and record the added data files in the snapshot.
-
-        Single-writer per table assumed (as in the reference's
-        per-source jobs): the added set is the before/after directory
-        diff, so a concurrent writer between the two walks would be
-        misattributed.  Manifest paths are stored RELATIVE to the
-        catalog root so snapshots survive the root being moved or
-        mounted elsewhere.
-        """
-        before = self._data_files(name)
         df.write.mode("append").parquet(self.table_path(name))
-        added = sorted(
-            os.path.relpath(f, self.root) for f in self._data_files(name) - before
-        )
-        props = dict(properties or {})
-        props["added_files"] = added
-        return self._commit(name, "append", props)
-
-    def _abs(self, manifest_path: str) -> str:
-        """Manifest paths are root-relative since round 3; absolute
-        paths from older logs still resolve as-is."""
-        if os.path.isabs(manifest_path):
-            return manifest_path
-        return os.path.join(self.root, manifest_path)
-
-    def read_incremental(self, name: str, since_snapshot_id: int) -> DataFrame:
-        """Rows added by append snapshots AFTER `since_snapshot_id` —
-        the incremental-pull contract (`nabu pull` transfers only
-        changed artifacts, /root/reference/userCode/assetGroups/
-        export.py:87-107; Iceberg incremental scan between snapshots).
-
-        Only valid over an append-only history since the anchor: any
-        overwrite in the range rewrites history and a file-level delta
-        would double-count, so it raises instead (Iceberg's incremental
-        scan has the same restriction).
-        """
-        newer = [s for s in self.snapshots(name) if s["snapshot_id"] > since_snapshot_id]
-        non_append = [s for s in newer if s["operation"] != "append"]
-        if non_append:
-            ops = {s["operation"] for s in non_append}
-            raise ValueError(
-                f"incremental read over non-append snapshots {sorted(ops)}; "
-                f"re-anchor on snapshot {self.current_snapshot_id(name)}"
-            )
-        files = [self._abs(f) for s in newer for f in s["properties"].get("added_files", [])]
-        if not files:
-            return self.read(name).limit(0)
-        return self.spark.read.parquet(*files)
-
-    def read_at(self, name: str, snapshot_id: int) -> DataFrame:
-        """Time-travel read: the table as of `snapshot_id` (Iceberg
-        `VERSION AS OF` / lakeFS ref-read analog,
-        /root/reference/userCode/lib/lakefs.py:60-111).
-
-        Reconstructable only over an append-only history up to the
-        anchor — the per-snapshot added-files manifests ARE the
-        version metadata; an overwrite discards replaced files, so
-        histories containing one are not re-readable and raise.
-        """
-        upto = [s for s in self.snapshots(name) if s["snapshot_id"] <= snapshot_id]
-        if not upto:
-            raise ValueError(f"no snapshot <= {snapshot_id} for table {name!r}")
-        non_append = sorted({s["operation"] for s in upto if s["operation"] != "append"})
-        if non_append:
-            raise ValueError(
-                f"time travel across non-append snapshots {non_append}: "
-                "replaced data files no longer exist"
-            )
-        files = [self._abs(f) for s in upto for f in s["properties"].get("added_files", [])]
-        if not files:
-            return self.read(name).limit(0)
-        return self.spark.read.parquet(*files)
-
-    def read_merged_schema(self, name: str) -> DataFrame:
-        """Schema-evolution read: union of all column sets across the
-        table's files (parquet mergeSchema) — appends may add columns
-        over time; older rows surface NULL for columns they predate."""
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            self.table_path(name)
-        )
-
-    def _data_files(self, name: str) -> set[str]:
-        root = self.table_path(name)
-        out: set[str] = set()
-        for dirpath, _, names in os.walk(root):
-            for f in names:
-                if f.endswith(".parquet"):
-                    out.add(os.path.join(dirpath, f))
-        return out
+        return self._commit(name, "append", properties or {})
 
     def delete_partitions(
         self,
@@ -169,8 +86,6 @@ class Catalog:
         (≈ Iceberg `DELETE FROM t WHERE part IN (…)` / the reference's
         stale-partition prune, /root/reference/userCode/lib/dagster.py:19-30).
         Missing partitions are ignored (idempotent)."""
-        import shutil
-
         root = self.table_path(name)
         wanted = {str(k) for k in keys}
         dropped = []
@@ -188,295 +103,15 @@ class Catalog:
         props["dropped_partitions"] = sorted(set(dropped))
         return self._commit(name, "delete_partitions", props)
 
-    def merge_upsert(
-        self,
-        df: DataFrame,
-        name: str,
-        key_cols: list[str],
-        partition_col: str,
-        properties: dict[str, Any] | None = None,
-    ) -> int:
-        """Row-level MERGE — the Iceberg ``MERGE INTO … WHEN MATCHED
-        THEN UPDATE WHEN NOT MATCHED THEN INSERT`` analog, copy-on-write
-        at partition granularity.
-
-        Source rows replace existing rows with the same key and insert
-        otherwise.  Only affected partitions are rewritten: those the
-        source touches, plus any partition holding a matched key (so a
-        key that MOVES partitions is deleted from its old home —
-        Iceberg CoW rewrites every file containing a matched row).
-        Untouched partitions keep their data files byte-identical
-        (asserted by mtime in tests/test_merge_upsert.py).
-
-        ≈ the reference's idempotent re-crawl upsert: summoned docs are
-        keyed by content hash and a source's re-harvest replaces by key
-        without touching other sources (--cleanup-outdated-jsonld,
-        /root/reference/userCode/lib/containers.py:52, docs/hdt.md:12-16).
-
-        Source must be unique on `key_cols` (raises otherwise —
-        Iceberg's MERGE cardinality check).  The target must be laid
-        out as `partition_col=` directories (written by
-        overwrite_partitions / a previous merge) — merging into a flat
-        append() layout raises, because dynamic overwrite could never
-        retire the flat files.  Snapshot properties record
-        n_updated / n_inserted / rewritten partitions.
-
-        Partition values are compared through Spark's own string
-        rendering (CAST(col AS STRING)), and on-disk directories are
-        matched by DECODING their names rather than re-encoding the
-        value — Spark escapes only some characters (Hive
-        escapePathName), so forward-encoding guesses miss partitions
-        like booleans (`part=true` vs Python `True`) or partially
-        escaped strings.
-        """
-        # the source is read 3-4 times (cardinality check, match count,
-        # partition collect, final union) — materialize it once
-        df = df.localCheckpoint()
-        stats = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(*[F.col(c) for c in key_cols]).alias("nk"),
-        ).collect()[0]
-        if stats["n"] != stats["nk"]:
-            raise ValueError(
-                f"merge source not unique on {key_cols} (MERGE cardinality check)"
-            )
-        part_str = F.col(partition_col).cast("string")
-        props = dict(properties or {})
-        if not self.exists(name):
-            props.update(
-                {
-                    "operation_detail": "merge_upsert",
-                    "n_updated": 0,
-                    "n_inserted": stats["n"],
-                    "rewritten_partitions": sorted(
-                        r[0] for r in df.select(part_str).distinct().collect()
-                    ),
-                }
-            )
-            return self.overwrite_partitions(df, name, [partition_col], props)
-        root = self.table_path(name)
-        flat = [f for f in os.listdir(root) if f.endswith(".parquet")]
-        if flat:
-            raise ValueError(
-                f"merge_upsert target {name!r} has non-partitioned data files "
-                f"(e.g. {flat[0]}); rewrite it partitioned by {partition_col!r} first"
-            )
-
-        current = self.read(name)
-        keys = df.select(*key_cols)
-        matched = current.join(keys, key_cols, "left_semi")
-        affected = (
-            df.select(part_str.alias("p"))
-            .unionByName(matched.select(part_str.alias("p")))
-            .distinct()
-            .collect()
-        )
-        part_keys = sorted(r[0] for r in affected)
-        # matched counts distinct keys, not target rows: a key
-        # duplicated in the TARGET (two prior appends) still updates
-        # once, and n_inserted must never go negative
-        n_matched = matched.select(*key_cols).distinct().count()
-        n_inserted = stats["n"] - n_matched
-
-        cur_sub = current.filter(part_str.isin(part_keys))
-        kept = cur_sub.join(keys, key_cols, "left_anti")
-        # the merged plan reads the very files the overwrite replaces
-        merged = kept.unionByName(df.select(*current.columns)).localCheckpoint()
-        # a partition whose every row was matched-and-moved ends up with
-        # no rows in `merged`; dynamic overwrite only replaces partitions
-        # PRESENT in the write, so the emptied ones are dropped explicitly
-        # (after the localCheckpoint has materialized their surviving rows)
-        present = {
-            r[0] for r in merged.select(part_str.alias("p")).distinct().collect()
-        }
-        emptied = {p for p in part_keys if p not in present}
-        if emptied:
-            import shutil
-
-            for d in os.listdir(root):
-                if not d.startswith(f"{partition_col}="):
-                    continue
-                if self._decode_partition_dir(d) in emptied:
-                    shutil.rmtree(os.path.join(root, d))
-        props.update(
-            {
-                "operation_detail": "merge_upsert",
-                "n_updated": n_matched,
-                "n_inserted": n_inserted,
-                "rewritten_partitions": part_keys,
-            }
-        )
-        return self.overwrite_partitions(merged, name, [partition_col], props)
-
     @staticmethod
     def _decode_partition_dir(dirname: str) -> str | None:
         """`part=a%20b` → `a b`: decode a partition directory name back
         to its value string (Hive escapePathName is %-escaping of a
         character subset, so unquote inverts it for any subset)."""
-        from urllib.parse import unquote
-
         enc = dirname.split("=", 1)[1]
         if enc == "__HIVE_DEFAULT_PARTITION__":
             return None
         return unquote(enc)
-
-    def compact_partitions(
-        self,
-        name: str,
-        partition_col: str,
-        target_bytes: int = 128 * 1024 * 1024,
-        small_file_threshold: float = 0.5,
-    ) -> int:
-        """Small-files compaction — the table-maintenance half of
-        Iceberg's rewrite_data_files, over the parquet stand-in.
-
-        Incremental syncs overwrite single partitions repeatedly; each
-        run's task layout leaves its own small files, and at 100 TB the
-        scan cost becomes file-open-bound.  This rewrites ONLY the
-        partitions whose average file size is below
-        `small_file_threshold × target_bytes`, coalescing each to
-        ceil(bytes/target) files via a dynamic partition overwrite —
-        untouched partitions keep their files (and mtimes).  Returns
-        the number of partitions rewritten.
-        """
-        root = self.table_path(name)
-        victims: list[str] = []
-        for d in os.listdir(root):
-            if "=" not in d or not d.startswith(f"{partition_col}="):
-                continue
-            p = os.path.join(root, d)
-            parts = [f for f in os.listdir(p) if f.endswith(".parquet")]
-            if len(parts) <= 1:
-                continue
-            total = sum(os.path.getsize(os.path.join(p, f)) for f in parts)
-            if total / len(parts) < small_file_threshold * target_bytes:
-                victims.append(d.split("=", 1)[1])
-        if not victims:
-            return 0
-        from urllib.parse import unquote
-
-        keys = [unquote(v) for v in victims]
-        subset = self.read(name).filter(F.col(partition_col).isin(keys))
-        # hash-repartition on the key → exactly one file per rewritten
-        # partition (they are small by selection, so one target-size
-        # file each); localCheckpoint because the rewrite reads the
-        # very files the overwrite replaces
-        compacted = subset.repartition(F.col(partition_col)).localCheckpoint()
-        self.overwrite_partitions(
-            compacted, name, [partition_col],
-            properties={"operation_detail": "compaction", "partitions": sorted(keys)},
-        )
-        return len(keys)
-
-    # -- bucketed layout ------------------------------------------------------
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        name: str,
-        bucket_col: str,
-        n_buckets: int,
-        properties: dict[str, Any] | None = None,
-    ) -> int:
-        """Hash-bucketed, per-bucket-sorted table layout (Spark native
-        bucketing; Iceberg `bucket(N, col)` partition-transform analog).
-
-        Two tables bucketed the same way join on the bucket column with
-        ZERO exchanges — at 100 TB the repeated mention⨝mention and
-        fact⨝fact joins are the shuffle bill, and co-located layout
-        pays it once at write time (plan-asserted in
-        tests/test_plans.py::test_bucketed_join_joins_without_exchange).
-        Registered as an external table at the catalog path so
-        `spark.table(name)` carries the bucket metadata; plain
-        `catalog.read` on the same path still works (ignoring it).
-        """
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .option("path", self.table_path(name))
-            .format("parquet")
-            .saveAsTable(name)
-        )
-        props = dict(properties or {})
-        props["bucketed_by"] = bucket_col
-        props["n_buckets"] = n_buckets
-        return self._commit(name, "overwrite", props)
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        """Read via the session catalog so bucket metadata applies."""
-        return self.spark.table(name)
-
-    # -- branches -----------------------------------------------------------
-    # The lakeFS branch→commit→merge contract
-    # (/root/reference/userCode/lib/lakefs.py:60-111, lib/classes.py:267-345,
-    # assetGroups/export.py:543-554): create a branch if absent, commit
-    # artifacts to it, merge to main.  A branch pins the table's data
-    # files at creation time as its base; branch appends land in a
-    # sibling directory invisible to main reads; merge moves the branch
-    # files into the main table and commits them as ONE append snapshot,
-    # so time-travel and incremental reads work across the merge.
-    # Append-only tables (the same restriction as read_at).
-
-    def _branch_table(self, name: str, branch: str) -> str:
-        return f"{name}._branch_{branch}"
-
-    def create_branch(self, name: str, branch: str) -> int:
-        bt = self._branch_table(name, branch)
-        if self.snapshots(bt):
-            raise ValueError(f"branch {branch!r} already exists for table {name!r}")
-        base = sorted(os.path.relpath(f, self.root) for f in self._data_files(name))
-        return self._commit(bt, "create_branch", {"source_table": name, "base_files": base})
-
-    def branch_exists(self, name: str, branch: str) -> bool:
-        return bool(self.snapshots(self._branch_table(name, branch)))
-
-    def append_to_branch(
-        self, df: DataFrame, name: str, branch: str,
-        properties: dict[str, Any] | None = None,
-    ) -> int:
-        if not self.branch_exists(name, branch):
-            raise ValueError(f"no branch {branch!r} for table {name!r} — create_branch first")
-        return self.append(df, self._branch_table(name, branch), properties)
-
-    def read_branch(self, name: str, branch: str) -> DataFrame:
-        """The table as seen from the branch: base files at branch
-        creation ∪ the branch's own appends.  Main writes after the
-        branch point are invisible (snapshot isolation, not rebase)."""
-        bt = self._branch_table(name, branch)
-        snaps = self.snapshots(bt)
-        if not snaps:
-            raise ValueError(f"no branch {branch!r} for table {name!r}")
-        base = [self._abs(f) for f in snaps[0]["properties"]["base_files"]]
-        own = sorted(self._data_files(bt))
-        files = base + own
-        if not files:
-            return self.read(name).limit(0)
-        return self.spark.read.parquet(*files)
-
-    def merge_branch_to_main(
-        self, name: str, branch: str, properties: dict[str, Any] | None = None
-    ) -> int:
-        """Move the branch's data files into the main table directory
-        and commit them as one append snapshot; the branch ref is
-        deleted (lakeFS merge + branch cleanup)."""
-        import shutil
-
-        bt = self._branch_table(name, branch)
-        if not self.snapshots(bt):
-            raise ValueError(f"no branch {branch!r} for table {name!r}")
-        dest_root = self.table_path(name)
-        os.makedirs(dest_root, exist_ok=True)
-        moved = []
-        for f in sorted(self._data_files(bt)):
-            dest = os.path.join(dest_root, f"{branch}-{os.path.basename(f)}")
-            shutil.move(f, dest)
-            moved.append(os.path.relpath(dest, self.root))
-        shutil.rmtree(self.table_path(bt), ignore_errors=True)
-        os.remove(self._snapshot_log(bt))
-        props = dict(properties or {})
-        props["merged_branch"] = branch
-        props["added_files"] = moved
-        return self._commit(name, "append", props)
 
     # -- reads ------------------------------------------------------------
     def read(self, name: str) -> DataFrame:
@@ -485,7 +120,7 @@ class Catalog:
     def exists(self, name: str) -> bool:
         p = self.table_path(name)
         return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f.startswith("src_partition=") or "=" in f
+            f.endswith(".parquet") or "=" in f
             for f in os.listdir(p)
         )
 
@@ -505,7 +140,8 @@ class Catalog:
         return snapshot_id
 
     def current_snapshot_id(self, name: str) -> int:
-        return self.snapshots(name)[-1]["snapshot_id"] if self.snapshots(name) else 0
+        snaps = self.snapshots(name)
+        return snaps[-1]["snapshot_id"] if snaps else 0
 
     def snapshots(self, name: str) -> list[dict[str, Any]]:
         path = self._snapshot_log(name)
@@ -513,70 +149,3 @@ class Catalog:
             return []
         with open(path) as f:
             return [json.loads(line) for line in f if line.strip()]
-
-    def collect_stats(
-        self, name: str, columns: list[str] | None = None, ndv_rsd: float = 0.05
-    ) -> int:
-        """ANALYZE TABLE analog: per-column min / max / null count +
-        approximate NDV (HyperLogLog++, bounded error `ndv_rsd`) in ONE
-        aggregate pass, committed as a snapshot entry so downstream
-        planners (and humans) can read them without touching data.
-
-        At 100 TB these stats are what makes join-side choice and
-        partition pruning cheap — Iceberg keeps them per data file;
-        here they land in the snapshot log as the table-level rollup.
-        min/max aggregate on the NATIVE column type (numeric bounds,
-        not lexicographic — min of [9, 10] must be 9, not "10") and
-        only the aggregated result is cast to string for JSON storage.
-        """
-        from pyspark.sql.types import MapType
-
-        df = self.read(name)
-        cols = columns or [f.name for f in df.schema.fields]
-        dtypes = {f.name: f.dataType for f in df.schema.fields}
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in cols:
-            # maps are the one unorderable type — their "bounds" stay
-            # lexicographic-on-string (documented, not range-meaningful)
-            src = F.col(c).cast("string") if isinstance(dtypes.get(c), MapType) else F.col(c)
-            aggs.append(F.min(src).cast("string").alias(f"{c}__min"))
-            aggs.append(F.max(src).cast("string").alias(f"{c}__max"))
-            aggs.append(
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls")
-            )
-            aggs.append(F.approx_count_distinct(c, rsd=ndv_rsd).alias(f"{c}__ndv"))
-        row = df.agg(*aggs).first()
-        stats: dict[str, Any] = {"row_count": row["_rows"], "columns": {}}
-        for c in cols:
-            stats["columns"][c] = {
-                "min": row[f"{c}__min"],
-                "max": row[f"{c}__max"],
-                "null_count": row[f"{c}__nulls"],
-                "approx_ndv": row[f"{c}__ndv"],
-            }
-        return self._commit(name, "collect_stats", {"stats": stats})
-
-    def table_stats(self, name: str) -> dict[str, Any] | None:
-        """Latest collect_stats payload, or None if never analyzed."""
-        for s in reversed(self.snapshots(name)):
-            if s["operation"] == "collect_stats":
-                return s["properties"]["stats"]
-        return None
-
-    def prune_snapshots(self, name: str, keep_last: int = 100, batch: int = 1000) -> int:
-        """Oldest-first batched snapshot-log cleanup (≈ the reference's
-        ascending limit-100k run-record purge,
-        /root/reference/userCode/instance.py:41-51).  Returns the number
-        of entries removed; ids keep monotonically increasing."""
-        snaps = self.snapshots(name)
-        if len(snaps) <= keep_last:
-            return 0
-        removed = 0
-        while len(snaps) > keep_last:
-            drop = min(batch, len(snaps) - keep_last)
-            snaps = snaps[drop:]  # oldest first
-            removed += drop
-        with open(self._snapshot_log(name), "w") as f:
-            for entry in snaps:
-                f.write(json.dumps(entry) + "\n")
-        return removed

@@ -377,13 +377,15 @@ def _bitmap_verify(
     shrink from ~KB arrays to ~tens of bytes — small enough to
     BROADCAST to both sides of the candidate join, so no shuffle ever
     carries a shingle array (guide §2.3 "shuffle keys and metadata
-    instead of payloads", §3.1).  The vocab collect is driver-bounded
-    (≤ max_vocab longs).  inter, |A|, |B| are the exact integers of the
-    array path, and the threshold algebra + 6-dp jac reuse the
-    identical expressions, so the verified pairs are bit-identical."""
+    instead of payloads", §3.1).  The vocab collect is driver-bounded:
+    at most max_vocab + 1 longs, one past the gate to see it fail.
+    inter, |A|, |B| are the exact integers of the array path, and the
+    threshold algebra + 6-dp jac reuse the identical expressions, so
+    the verified pairs are bit-identical."""
     spark = base.sparkSession
     vocab = sorted(
-        r["h"] for r in base.select(F.explode("s").alias("h")).distinct().collect()
+        r["h"]
+        for r in base.select(F.explode("s").alias("h")).distinct().limit(max_vocab + 1).collect()
     )
     if not 0 < len(vocab) <= max_vocab:
         return None

@@ -20,8 +20,7 @@ Scale notes:
   fixpoint raises RuntimeError (a silently truncated core is a
   SUPERSET of the true k-core).
 - at 1000-executor scale both join sides would be bucketed on the node
-  id so every round's semi-joins are shuffle-free (the same layout
-  ``catalog.write_bucketed`` proves in tests/test_plans.py).
+  id (Spark ``bucketBy``) so every round's semi-joins are shuffle-free.
 """
 
 from __future__ import annotations

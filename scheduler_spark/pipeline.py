@@ -148,7 +148,6 @@ def run_pipeline(
     catalog: Catalog,
     run_id: str,
     salt: int = 8,
-    extraction_partitions: int | None = None,
     strict: bool = False,
     source_widths: DataFrame | None = None,
     alias_optouts: DataFrame | None = None,
@@ -270,8 +269,7 @@ def run_pipeline(
     meta_subset = slim.filter(in_dirty & F.col("_reason").isNull()).drop("_reason")
 
     # -- 2. salted extraction (mega-repo skew bound + per-source caps) ---
-    n_parts = extraction_partitions or spark.sparkContext.defaultParallelism
-    salted = salted_by_source(subset, salt, n_parts, source_widths)
+    salted = salted_by_source(subset, salt, spark.sparkContext.defaultParallelism, source_widths)
     mentions = extract_mentions(salted).cache()
 
     # -- 3. entity linking ----------------------------------------------

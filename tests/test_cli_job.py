@@ -22,6 +22,10 @@ def test_cli_job_runs_and_resumes(spark, tmp_path, capsys):
         spark, capsys, ["--input", "synth:300", "--catalog", cat, "--run-id", "r1"]
     )
     assert code == 0
+    assert list(out) == [
+        "run_id", "n_partitions_processed", "n_triples", "snapshot_id",
+        "skipped", "n_quarantined", "n_pruned_partitions",
+    ]
     assert out["n_triples"] > 0 and out["skipped"] is False
     assert Catalog(cat, spark).read("triples").count() == out["n_triples"]
 

@@ -86,6 +86,43 @@ def test_minhash_lsh_doc_pairs_match_exact_twin(spark):
     assert lsh == exact == {(1, 2)}  # cross-block (1,4) is never a candidate
 
 
+def test_minhash_lsh_past_the_bitmap_vocabulary_uses_the_array_verify(spark, monkeypatch):
+    """Over 16,384 distinct shingles the bitmap verify declines after
+    collecting one row past its gate, and the array-intersect fallback
+    returns exactly the exact twin's pairs (the planted near-dups)."""
+    import random
+
+    from scheduler_spark.operators.dedup import _bitmap_verify, _minhash_base, minhash_lsh_pairs
+
+    rng = random.Random(7)
+    alphabet = "abcdefghijklmnopqrstuvwxyz0123456789"
+    texts = ["".join(rng.choice(alphabet) for _ in range(100)) for _ in range(300)]
+    for i in range(0, 10, 2):  # doc i+1 is doc i with its last char changed
+        texts[i + 1] = texts[i][:-1] + ("x" if texts[i][-1] != "x" else "y")
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    base = _minhash_base(df, "doc_id", "text", None, 3)
+    vocab = base.select(F.explode("s")).distinct().count()
+    assert vocab > 16384
+
+    collected = []
+    original = type(base).collect
+
+    def recording(self):
+        rows = original(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(base), "collect", recording)
+    cand = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert _bitmap_verify(cand, base, "doc_a", "doc_b", 0.7) is None
+    assert collected == [16385]
+    monkeypatch.undo()
+
+    lsh = {(p.doc_a, p.doc_b) for p in minhash_lsh_pairs(df, threshold=0.7).collect()}
+    exact = {(p.doc_a, p.doc_b) for p in ngram_jaccard_pairs(df, threshold=0.7).collect()}
+    assert lsh == exact == {(i, i + 1) for i in range(0, 10, 2)}
+
+
 def test_embedding_lsh_pairs_match_exact_cosine(spark):
     from scheduler_spark.operators.similarity import embedding_lsh_pairs
 

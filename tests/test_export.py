@@ -97,32 +97,6 @@ def test_release_manifest_matches_artifacts(spark, tmp_path):
         assert row.bytesum == hashlib.sha256(raw).hexdigest()
 
 
-def test_compaction_merges_small_files_only(spark, tmp_path):
-    from pyspark.sql import functions as F2
-
-    catalog = Catalog(root=str(tmp_path), spark=spark)
-    df = spark.range(2000).select(
-        F2.concat(F2.lit("p"), F2.pmod("id", F2.lit(3)).cast("string")).alias("src_partition"),
-        F2.col("id").alias("v"),
-    )
-    # fragment: 8 files per partition
-    catalog.overwrite_partitions(df.repartition(24), "t", ["src_partition"])
-
-    def files_of(part):
-        p = os.path.join(catalog.table_path("t"), f"src_partition={part}")
-        return [f for f in os.listdir(p) if f.endswith(".parquet")]
-
-    assert all(len(files_of(f"p{i}")) > 1 for i in range(3))
-    before = {r.v for r in catalog.read("t").collect()}
-
-    n = catalog.compact_partitions("t", "src_partition", target_bytes=1024 * 1024)
-    assert n == 3
-    assert all(len(files_of(f"p{i}")) == 1 for i in range(3))
-    assert {r.v for r in catalog.read("t").collect()} == before
-    # second pass is a no-op (already compact)
-    assert catalog.compact_partitions("t", "src_partition", target_bytes=1024 * 1024) == 0
-
-
 def test_zorder_key_interleaves_bits(spark):
     df = spark.createDataFrame([(3, 5)], "x long, y long")
     got = df.select(zorder_key(F.col("x"), F.col("y"), bits=4).alias("z")).first()["z"]

@@ -64,27 +64,6 @@ def test_smj_large_join_is_sort_merge_under_aqe(spark, sf_dir):
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
 
 
-def test_bucketed_join_joins_without_exchange(spark, tmp_path):
-    """Co-located layout is the 100 TB shuffle killer: two tables
-    bucketed identically on the join key sort-merge-join with ZERO
-    exchanges — the shuffle was paid once at write time."""
-    from scheduler_spark.catalog import Catalog
-
-    cat = Catalog(root=str(tmp_path), spark=spark)
-    left = spark.range(10_000).selectExpr("id AS k", "id * 2 AS a")
-    right = spark.range(10_000).selectExpr("id AS k", "id * 3 AS b")
-    cat.write_bucketed(left, "bkt_left", "k", 8)
-    cat.write_bucketed(right, "bkt_right", "k", 8)
-    joined = cat.read_bucketed("bkt_left").hint("merge").join(
-        cat.read_bucketed("bkt_right"), "k"
-    )
-    plan = _plan(joined)
-    assert "SortMergeJoin" in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
-    for t in ("bkt_left", "bkt_right"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_aqe_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"

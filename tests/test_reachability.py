@@ -1,12 +1,12 @@
-"""Every module and top-level function under scheduler_spark/ is
+"""Every module, top-level function and method under scheduler_spark/ is
 reached from an entry point.
 
 A static `ast` walk of the imports (function-local ones included) from
 the programs that run the package: `python -m scheduler_spark`,
 `__spark_entry__.py`, `bench.py`, `bench_extra.py`, `perfbench/` and
-`tools/`; then a walk of the names that reached code mentions.  A module
-or function that only its own tests use is a second code path nobody
-runs; these tests are the alarm for one.  No Spark session.
+`tools/`; then a walk of the names that reached code mentions.  A
+module, function or method that only its own tests use is a second code
+path nobody runs; these tests are the alarm for one.  No Spark session.
 """
 
 from __future__ import annotations
@@ -121,37 +121,66 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
-def test_every_top_level_function_is_reached_from_an_entry_point():
-    """By name, not by scope: a function counts as reached when code
-    that runs mentions its name.  Module-level code of a reached module
-    runs (a decorator registers the function it wraps), and so does
-    every entry file whole."""
+def _reach():
+    """The top-level functions and the methods of the reached modules,
+    and the names reached code mentions.  By name, not by scope: a
+    function or method counts as reached when code that runs mentions
+    its name.  Module-level code of a reached module runs (a decorator
+    registers the function it wraps), and so do every entry file whole
+    and the parts of a class body outside its methods.  A dunder method
+    is a root: the language calls it, not a name."""
     modules = _package_modules()
-    reached_modules = _reached(modules)
     functions: dict[str, list[tuple[str, ast.AST]]] = {}
+    methods: dict[str, list[tuple[str, ast.AST]]] = {}
     seen: set[str] = set()
     for path in [ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "bench_extra.py",
                  *(ROOT / "perfbench").glob("*.py"), *(ROOT / "tools").glob("*.py")]:
         seen |= _names(ast.parse(path.read_text(), str(path)))
-    for mod in sorted(reached_modules & modules.keys()):
+    for mod in sorted(_reached(modules) & modules.keys()):
         for node in ast.parse(modules[mod].read_text()).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 functions.setdefault(node.name, []).append((mod, node))
                 if node.decorator_list or f"{mod}.{node.name}" in EXEMPT_FUNCTIONS:
                     seen.add(node.name)
+            elif isinstance(node, ast.ClassDef):
+                for part in [*node.bases, *node.keywords, *node.decorator_list]:
+                    seen |= _names(part)
+                for item in node.body:
+                    if isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        methods.setdefault(item.name, []).append((f"{mod}.{node.name}", item))
+                        if item.name.startswith("__") and item.name.endswith("__"):
+                            seen.add(item.name)
+                    else:
+                        seen |= _names(item)
             else:
                 seen |= _names(node)
-    defined = {f"{mod}.{name}" for name, defs in functions.items() for mod, _ in defs}
-    assert EXEMPT_FUNCTIONS.keys() <= defined, "an exempt function is gone: drop it"
     todo, reached = list(seen), set()
     while todo:
         name = todo.pop()
         if name not in reached:
             reached.add(name)
-            todo.extend(n for _, node in functions.get(name, []) for n in _names(node))
+            for _, node in functions.get(name, []) + methods.get(name, []):
+                todo.extend(_names(node))
+    return functions, methods, reached
+
+
+def test_every_top_level_function_is_reached_from_an_entry_point():
+    functions, _, reached = _reach()
+    defined = {f"{mod}.{name}" for name, defs in functions.items() for mod, _ in defs}
+    assert EXEMPT_FUNCTIONS.keys() <= defined, "an exempt function is gone: drop it"
     unreached = sorted(f"{mod}.{name}" for name, defs in functions.items()
                        if name not in reached for mod, _ in defs)
     assert not unreached, (
         f"top-level functions no entry point reaches: {unreached} — "
         "call them from an entry point, exempt them with a reason, or delete them"
+    )
+
+
+def test_every_method_is_reached_from_an_entry_point():
+    _, methods, reached = _reach()
+    unreached = sorted(f"{cls}.{name}" for name, defs in methods.items()
+                       if name not in reached for cls, _ in defs)
+    assert not unreached, (
+        f"methods no entry point reaches: {unreached} — "
+        "call them from an entry point or delete them"
     )

@@ -126,83 +126,6 @@ def test_vanished_source_partitions_are_pruned(spark, tmp_path):
     assert r3.skipped and r3.n_pruned_partitions == 0
 
 
-def test_snapshot_log_pruning_oldest_first(spark, tmp_path):
-    catalog = Catalog(root=str(tmp_path), spark=spark)
-    df = spark.range(1).select(F.lit("x").alias("v"))
-    for _ in range(12):
-        catalog.overwrite(df, "t")
-    assert catalog.current_snapshot_id("t") == 12
-    removed = catalog.prune_snapshots("t", keep_last=5)
-    assert removed == 7
-    snaps = catalog.snapshots("t")
-    assert [s["snapshot_id"] for s in snaps] == list(range(8, 13))
-    # ids keep increasing after a prune
-    catalog.overwrite(df, "t")
-    assert catalog.current_snapshot_id("t") == 13
-
-
-def test_incremental_read_returns_only_new_appends(spark, tmp_path):
-    """Snapshot-delta reads: the incremental-pull contract (`nabu pull`
-    moves only changed artifacts) as an Iceberg-style incremental scan
-    over append snapshots."""
-    import pytest
-
-    catalog = Catalog(root=str(tmp_path), spark=spark)
-
-    def batch(lo, hi):
-        return spark.range(lo, hi).selectExpr("id AS v")
-
-    s1 = catalog.append(batch(0, 10), "log")
-    catalog.append(batch(10, 25), "log")
-    catalog.append(batch(25, 30), "log")
-
-    inc = catalog.read_incremental("log", since_snapshot_id=s1)
-    assert {r.v for r in inc.collect()} == set(range(10, 30))
-    # anchor at head → empty delta (with the right schema)
-    head = catalog.current_snapshot_id("log")
-    assert catalog.read_incremental("log", head).count() == 0
-    assert catalog.read_incremental("log", head).columns == ["v"]
-
-    # an overwrite in the range invalidates file-level deltas → raise
-    catalog.overwrite(batch(0, 5), "log")
-    with pytest.raises(ValueError, match="non-append"):
-        catalog.read_incremental("log", s1)
-    # re-anchoring past the overwrite works again
-    head2 = catalog.current_snapshot_id("log")
-    catalog.append(batch(100, 103), "log")
-    assert {r.v for r in catalog.read_incremental("log", head2).collect()} == {100, 101, 102}
-
-
-def test_time_travel_read_at_snapshot(spark, tmp_path):
-    import pytest
-
-    catalog = Catalog(root=str(tmp_path), spark=spark)
-    s1 = catalog.append(spark.range(0, 10).selectExpr("id AS v"), "log")
-    s2 = catalog.append(spark.range(10, 25).selectExpr("id AS v"), "log")
-    catalog.append(spark.range(25, 30).selectExpr("id AS v"), "log")
-
-    assert {r.v for r in catalog.read_at("log", s1).collect()} == set(range(10))
-    assert {r.v for r in catalog.read_at("log", s2).collect()} == set(range(25))
-    assert catalog.read("log").count() == 30  # head unaffected
-    with pytest.raises(ValueError, match="no snapshot"):
-        catalog.read_at("log", 0)
-    catalog.overwrite(spark.range(3).selectExpr("id AS v"), "log")
-    with pytest.raises(ValueError, match="non-append"):
-        catalog.read_at("log", catalog.current_snapshot_id("log"))
-
-
-def test_schema_evolution_merged_read(spark, tmp_path):
-    catalog = Catalog(root=str(tmp_path), spark=spark)
-    catalog.append(spark.range(5).selectExpr("id AS v"), "evo")
-    catalog.append(
-        spark.range(5, 8).selectExpr("id AS v", "id * 10 AS extra"), "evo"
-    )
-    merged = catalog.read_merged_schema("evo")
-    assert set(merged.columns) == {"v", "extra"}
-    rows = {r.v: r.extra for r in merged.collect()}
-    assert rows[6] == 60 and rows[0] is None  # old rows NULL-fill
-
-
 def test_checkpoint_has_one_row_per_partition(spark, tmp_path):
     catalog = Catalog(root=str(tmp_path), spark=spark)
     files = synth_files(spark, n_files=200)
@@ -211,53 +134,3 @@ def test_checkpoint_has_one_row_per_partition(spark, tmp_path):
     n_repos = files.select("repo").distinct().count()
     assert ckpt.count() == n_repos
     assert ckpt.select("partition").distinct().count() == n_repos
-
-
-def test_collect_stats_one_pass_and_latest_wins(spark, tmp_path):
-    """ANALYZE analog: min/max/nulls/approx-NDV land in the snapshot
-    log; table_stats returns the LATEST analysis."""
-    catalog = Catalog(root=str(tmp_path), spark=spark)
-    df = spark.createDataFrame(
-        [(1, "a", None), (2, "b", 5.0), (3, "b", 7.5)],
-        "id long, tag string, score double",
-    )
-    catalog.overwrite(df, "t")
-    catalog.collect_stats("t")
-    s = catalog.table_stats("t")
-    assert s["row_count"] == 3
-    assert s["columns"]["id"]["min"] == "1" and s["columns"]["id"]["max"] == "3"
-    assert s["columns"]["score"]["null_count"] == 1
-    assert s["columns"]["tag"]["approx_ndv"] == 2
-
-    catalog.append(df.limit(1), "t")
-    catalog.collect_stats("t", columns=["id"])
-    s2 = catalog.table_stats("t")
-    assert s2["row_count"] == 4
-    assert list(s2["columns"]) == ["id"]
-
-
-def test_collect_stats_numeric_bounds_not_lexicographic(spark, tmp_path):
-    """min/max must aggregate on the NATIVE type: over ids [9, 10, 100]
-    the numeric bounds are 9/100, while a string-cast aggregate would
-    report "10"/"9".  Same for negative doubles and timestamps."""
-    catalog = Catalog(root=str(tmp_path), spark=spark)
-    df = spark.sql(
-        "SELECT * FROM VALUES (9, -2.5, timestamp'2024-02-01 00:00:00'),"
-        " (10, 0.5, timestamp'2024-10-01 00:00:00'),"
-        " (100, -10.0, timestamp'2024-09-01 00:00:00')"
-        " AS t(id, score, ts)"
-    )
-    catalog.overwrite(df, "t")
-    catalog.collect_stats("t")
-    s = catalog.table_stats("t")
-    assert s["columns"]["id"]["min"] == "9" and s["columns"]["id"]["max"] == "100"
-    assert s["columns"]["score"]["min"] == "-10.0"
-    assert s["columns"]["score"]["max"] == "0.5"
-    assert s["columns"]["ts"]["min"].startswith("2024-02-01")
-    assert s["columns"]["ts"]["max"].startswith("2024-10-01")
-
-
-def test_table_stats_none_before_analyze(spark, tmp_path):
-    catalog = Catalog(root=str(tmp_path), spark=spark)
-    catalog.overwrite(spark.range(2), "t")
-    assert catalog.table_stats("t") is None
