@@ -212,12 +212,9 @@ def main() -> None:
         spreads[name] = round(max(times) / min(times), 2)
 
     # KG pipeline throughput on the deterministic synthetic corpus
-    from scheduler_spark.operators.canonicalize import canonicalize_values
     from scheduler_spark.operators.extract import extract_mentions, with_content_sha
-    from scheduler_spark.operators.linking import link_by_alias, lsh_candidate_pairs
-    from scheduler_spark.operators.materialize import build_triples
+    from scheduler_spark.pipeline import release_graph
     from scheduler_spark.synth import alias_df, synth_files
-    from pyspark.sql import functions as F
 
     files = with_content_sha(
         synth_files(spark, KG_BENCH_FILES, partitions=cpus * 2)
@@ -231,12 +228,7 @@ def main() -> None:
     def kg_trial() -> tuple[float, int]:
         t0 = time.perf_counter()
         mentions = extract_mentions(files).cache()  # feeds four branches
-        linked = link_by_alias(mentions, alias_df(spark))
-        ident = mentions.filter(F.col("kind") == "identifier")
-        edges = lsh_candidate_pairs(ident.select("value"))
-        ents = canonicalize_values(ident.select("value"), edges)
-        triples = build_triples(files, linked, ident, ents, run_id="bench")
-        n = triples.count()
+        n = release_graph(files, mentions, alias_df(spark), run_id="bench").count()
         sec = time.perf_counter() - t0
         mentions.unpersist()
         spark.catalog.clearCache()

@@ -200,6 +200,9 @@ def embedding_lsh_pairs(
     matches with p = (1-θ/π)^r, and recall = 1-(1-p)^bands: at
     cos ≥ 0.45 (θ ≤ 63.3°, p ≈ 0.42 for r=2) 16 bands give ≥ 0.9998 —
     measured, not trusted, by queries.ann_embedding_lsh_recall.
+
+    A vector whose size is not `dim` (null, empty, short or long) gets
+    no band bucket, so it is in no pair; it never raises.
     """
     v = vectors.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
@@ -224,16 +227,19 @@ def embedding_lsh_pairs(
     # folds per row (CodegenFallback, measured 3.35 s for this row at
     # sf1.0; 7.2 s when the fold table isn't even checkpointed and the
     # banding Generate re-evaluates it per element).  A vector's
-    # exploded rows never leave their task, so each sum accumulates in
-    # element order — the identical left fold — and a ±0.0 product can
-    # only flip the sign of a ZERO dot, which the `> 0` bucket bit maps
-    # identically; signatures are bit-compatible with the fold form
-    # (recall gate re-verified).  The aggregated signature table —
-    # (vid, 16 longs), the banding index a pipeline persists — is
-    # CHECKPOINTED so the cap window + both self-join sides read it
-    # without re-deriving the aggregation.
+    # exploded rows never leave their task, so each sum usually
+    # accumulates in element order, the same left fold; a map-side
+    # aggregate that spills merges partial sums in another order, so a
+    # dot within rounding of 0 may take the other bucket bit.  Recall is
+    # what the gate measures, not bit-compatibility with the fold
+    # form.  Vectors of any other size than `dim` are dropped before
+    # the explode: `element_at` past a plane's end raises under ANSI,
+    # and a short vector's dots would be partial.  The aggregated
+    # signature table — (vid, 16 longs), the banding index a pipeline
+    # persists — is CHECKPOINTED so the cap window + both self-join
+    # sides read it without re-deriving the aggregation.
     n_planes_total = bands * planes_per_band
-    ex = vectors.select(
+    ex = vectors.filter(F.size(vec_col) == dim).select(
         F.col(id_col).alias("vid"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "x"),
     )

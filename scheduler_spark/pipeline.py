@@ -5,8 +5,9 @@ catalog-refresh → harvest → release → export becomes one job:
 
     files ──sha256──▶ dirty-partition select (checkpoint anti-join)
           ──salted repartition──▶ mapInPandas mention extraction
-          ──▶ alias broadcast-join links  +  LSH ident edges ──▶ CC
-          ──▶ triples ──▶ overwrite_partitions(triples) + checkpoint
+          ──▶ release_graph: alias broadcast-join links  +  LSH ident
+              edges ──▶ CC ──▶ triples
+          ──▶ overwrite_partitions(triples) + checkpoint
 
 Skew: the mega-repo holds ~50% of rows (FIXTURES.md F6).  Before the
 Python-worker extraction stage we repartition on (repo, salt) so no
@@ -141,6 +142,40 @@ def salted_by_source(
     return out.drop("max_concurrency") if source_widths is not None else out
 
 
+def release_graph(
+    meta: DataFrame,
+    mentions: DataFrame,
+    aliases: DataFrame,
+    run_id: str,
+    alias_optouts: DataFrame | None = None,
+) -> DataFrame:
+    """The release step: one source set's mentions → its deduplicated
+    triples (alias link, identifier LSH + connected components, triples).
+
+    meta:          (repo, path, commit, lang, content_sha) per file, for
+                   the in_lang triples
+    mentions:      extraction output; four branches read it, so a caller
+                   that runs the plan more than once caches it
+    alias_optouts: sources (repo) that get no alias links — the
+                   per-source enrichment toggle
+                   (sources/sitemap.alias_enrichment_optouts)
+
+    Lazy apart from connected components' one bounded edge collect.
+    Every stage is called through this module's names, so a tracer that
+    replaces them sees each stage of every caller.
+    """
+    link_input = mentions
+    if alias_optouts is not None:
+        link_input = mentions.join(
+            F.broadcast(alias_optouts.select("repo")), "repo", "left_anti"
+        )
+    linked = link_by_alias(link_input, aliases)
+    ident_mentions = mentions.filter(F.col("kind") == "identifier")
+    edges = lsh_candidate_pairs(ident_mentions.select("value"))
+    ident_entities = canonicalize_values(ident_mentions.select("value"), edges)
+    return build_triples(meta, linked, ident_mentions, ident_entities, run_id)
+
+
 def run_pipeline(
     spark: SparkSession,
     files: DataFrame,
@@ -272,26 +307,12 @@ def run_pipeline(
     salted = salted_by_source(subset, salt, spark.sparkContext.defaultParallelism, source_widths)
     mentions = extract_mentions(salted).cache()
 
-    # -- 3. entity linking ----------------------------------------------
-    # per-source enrichment toggle (add_associated_mainstems=false ⇒ no
-    # alias links for that source; sources/sitemap.alias_enrichment_optouts)
-    link_input = mentions
-    if alias_optouts is not None:
-        link_input = mentions.join(
-            F.broadcast(alias_optouts.select("repo")), "repo", "left_anti"
-        )
-    linked = link_by_alias(link_input, aliases)
-    ident_mentions = mentions.filter(F.col("kind") == "identifier")
-    edges = lsh_candidate_pairs(ident_mentions.select("value"))
-    ident_entities = canonicalize_values(ident_mentions.select("value"), edges)
-
-    # -- 4. materialize --------------------------------------------------
-    # one action over the cached triples: the per-source lineage counters,
-    # from which n_triples, the snapshot properties and the lineage append
-    # frame (Arrow-built) all come
+    # -- 3./4. release graph, then one action over the cached triples: the
+    # per-source lineage counters, from which n_triples, the snapshot
+    # properties and the lineage append frame (Arrow-built) all come
     try:
+        triples = release_graph(meta_subset, mentions, aliases, run_id, alias_optouts).cache()
         _deadline("link")
-        triples = build_triples(meta_subset, linked, ident_mentions, ident_entities, run_id).cache()
         lineage = stage_counters(triples, "src_partition", run_id, "materialize")
         counters = lineage.collect()
         _deadline("materialize")
@@ -299,8 +320,7 @@ def run_pipeline(
         # release cached blocks before surfacing the cancel — a
         # long-lived session must not keep a dead run's cache pinned
         mentions.unpersist()
-        if "triples" in locals():
-            triples.unpersist()
+        triples.unpersist()
         raise
     props = {**counters_property(counters), "run_id": run_id}
 

@@ -2773,16 +2773,6 @@ def dedup_exact_by_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_shingles_spark(col):
-    lowered = col
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.length(lowered) - 3, F.lit(0))),
-            lambda i: F.substr(lowered, i + 1, F.lit(3)),
-        )
-    )
-
-
 @query(
     "dedup_ngram_jaccard",
     """
@@ -2809,11 +2799,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersect 64-bit shingle hashes, not 3-char strings: integer
     # equality beats string hashing per probe, and |set| is preserved
     # (in-doc hash collision odds ~1e-15)
+    from .operators.dedup import hashed_shingles
+
     d = _spread(spark, sf_dir, "documents").select(
-        "doc_id", "source",
-        F.array_distinct(
-            F.transform(_doc_shingles_spark(F.col("text")), lambda s: F.xxhash64(s))
-        ).alias("s"),
+        "doc_id", "source", hashed_shingles(F.col("text"), 3).alias("s")
     ).withColumn("n", F.size("s"))
     # --- r06: bitmap intersect (guide §1.2 "fix the algorithm") -------
     # The corpus's GLOBAL distinct-shingle vocabulary is tiny (377
@@ -7949,14 +7938,12 @@ def scan_pushdown_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full KG slice on the deterministic synthetic corpus: extract →
-    alias-link → LSH+CC canonicalize → triples.  Pure-JVM extraction
-    path keeps the driver's session independent of Python-worker module
-    shipping; the pandas-UDF path is exercised by entry() and tests."""
-    from .operators.canonicalize import canonicalize_values
-    from .operators.extract import extract_mentions_relational
-    from .operators.linking import link_by_alias, lsh_candidate_pairs
-    from .operators.materialize import build_triples
-    from .operators.extract import with_content_sha
+    pipeline.release_graph (alias link → LSH+CC canonicalize → triples).
+    Pure-JVM extraction path keeps the driver's session independent of
+    Python-worker module shipping; the pandas-UDF path is exercised by
+    entry() and tests."""
+    from .operators.extract import extract_mentions_relational, with_content_sha
+    from .pipeline import release_graph
     from .synth import alias_df, synth_files
 
     # Materialize the synthetic corpus before extraction — in production
@@ -7966,11 +7953,7 @@ def kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mentions are each consumed by multiple downstream branches.
     files = with_content_sha(synth_files(spark, n_files=500)).localCheckpoint()
     mentions = extract_mentions_relational(files)
-    linked = link_by_alias(mentions, alias_df(spark))
-    ident = mentions.filter(F.col("kind") == "identifier")
-    edges = lsh_candidate_pairs(ident.select("value"))
-    ents = canonicalize_values(ident.select("value"), edges)
-    return build_triples(files, linked, ident, ents, run_id="driver")
+    return release_graph(files, mentions, alias_df(spark), run_id="driver")
 
 
 def kg_3hop_chain(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -150,6 +150,30 @@ def test_embedding_lsh_pairs_match_exact_cosine(spark):
     assert got == exact
 
 
+def test_embedding_lsh_pairs_skip_wrong_size_vectors(spark):
+    """Null, empty, short and long vectors get no band bucket and never
+    raise (a long one used to index past the hyperplane under ANSI);
+    the dim-correct near-duplicate pair next to them is still found."""
+    from scheduler_spark.operators.similarity import embedding_lsh_pairs
+
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    v0 = rng.randn(16)
+    v1 = v0 + 0.05 * rng.randn(16)
+    rows = [
+        (0, v0.tolist()),
+        (1, v1.tolist()),
+        (2, None),
+        (3, []),
+        (4, v0[:15].tolist()),
+        (5, v0.tolist() + [0.5]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {(p.vec_a, p.vec_b) for p in embedding_lsh_pairs(df, dim=16, threshold=0.8).collect()}
+    assert got == {(0, 1)}
+
+
 def test_lsh_ann_finds_planted_near_duplicates(spark):
     import numpy as np
 

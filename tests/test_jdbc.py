@@ -13,6 +13,7 @@ unavoidable.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from scheduler_spark.catalog import Catalog
@@ -24,6 +25,15 @@ from scheduler_spark.pipeline import TRIPLES_TABLE, run_pipeline
 from scheduler_spark.synth import alias_df, synth_files
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _derby_log(spark, tmp_path_factory):
+    """Embedded Derby writes `derby.log` into the working directory
+    unless `derby.stream.error.file` is set when the engine boots (the
+    first connection); point it into this module's temp dir."""
+    log = tmp_path_factory.mktemp("derby") / "derby.log"
+    spark.sparkContext._jvm.java.lang.System.setProperty("derby.stream.error.file", str(log))
 
 
 def _url(tmp_path, name: str) -> str:

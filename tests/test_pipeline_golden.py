@@ -96,6 +96,51 @@ def test_kg_triples_match_committed_golden(spark):
     )
 
 
+def test_sync_commits_the_golden_triples(spark, tmp_path):
+    """A full sync of the golden corpus commits exactly the (subj, pred,
+    obj) set of the golden that the driver query produced: the sync and
+    `kg_pipeline_triples` run one release graph."""
+    from scheduler_spark.queries import _GOLDEN_TRIPLES_GLOB
+
+    golden_dir = _GOLDEN_TRIPLES_GLOB.rsplit("/", 1)[0]
+    want = {tuple(r) for r in spark.read.parquet(golden_dir).select("subj", "pred", "obj").collect()}
+    catalog = Catalog(root=str(tmp_path), spark=spark)
+    run_pipeline(spark, synth_files(spark, n_files=500), alias_df(spark), catalog, run_id="sync")
+    got = {tuple(r) for r in catalog.read(TRIPLES_TABLE).select("subj", "pred", "obj").collect()}
+    assert want
+    assert got == want, f"{len(got - want)} extra, {len(want - got)} missing"
+
+
+def test_sync_and_driver_query_route_through_pipeline_stages(spark, tmp_path, monkeypatch):
+    """The sync and the driver query call each release-graph stage once,
+    through `pipeline`'s module names — the names a stage tracer
+    replaces (perfbench/kgload.py PIPELINE_STAGES)."""
+    from scheduler_spark import pipeline
+    from scheduler_spark.queries import kg_pipeline_triples
+
+    calls: dict[str, int] = {}
+
+    def counting(name):
+        fn = getattr(pipeline, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] = calls.get(name, 0) + 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    stages = ["link_by_alias", "lsh_candidate_pairs", "canonicalize_values", "build_triples"]
+    for name in stages:
+        monkeypatch.setattr(pipeline, name, counting(name))
+    catalog = Catalog(root=str(tmp_path), spark=spark)
+    res = run_pipeline(spark, synth_files(spark, n_files=60), alias_df(spark), catalog, run_id="route")
+    assert not res.skipped
+    assert calls == dict.fromkeys(stages, 1)
+    calls.clear()
+    kg_pipeline_triples(spark, sf_dir="unused")
+    assert calls == dict.fromkeys(stages, 1)
+
+
 def test_triples_partitioned_by_source(result):
     catalog, _ = result
     import os

@@ -2,8 +2,9 @@
 
 `testdata_golden/kg_triples.parquet` pins the exact output of the
 deterministic KG pipeline slice that `__spark_entry__.queries()`
-exposes as `kg_pipeline_triples` (synth corpus n_files=500,
-run_id="driver").  The DuckDB oracle for `kg_pipeline_triples` /
+exposes as `kg_pipeline_triples` (synth corpus n_files=500, JVM
+extraction → `pipeline.release_graph`, run_id="driver"); a full sync of
+the same corpus commits the same (subj, pred, obj) set.  The DuckDB oracle for `kg_pipeline_triples` /
 `kg_3hop_chain` reads this parquet — the analog of the reference's
 golden e2e fixtures (/root/reference/userCode/defs_test.py:75-130:
 exact output objects + golden SPARQL pairs pinned in testdata).
